@@ -50,7 +50,7 @@ case class FuseBpeAll(child: Expression, pairs: Seq[(String, String, String)])
     var cur = new Array[UTF8String](n)
     var curLen = n
     var i = 0
-    while (i < n) { cur(i) = toks.getUTF8String(i); i += 1 }
+    while (i < n) { cur(i) = BpeExpressions.tokenAt(toks, i); i += 1 }
     var k = 0
     while (k < merges.length) {
       val (l, r, m) = merges(k)
@@ -95,10 +95,10 @@ case class AdjacentPairs(child: Expression)
     val n = toks.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](n - 1)
-    var prev = toks.getUTF8String(0)
+    var prev = BpeExpressions.tokenAt(toks, 0)
     var i = 1
     while (i < n) {
-      val t = toks.getUTF8String(i)
+      val t = BpeExpressions.tokenAt(toks, i)
       out(i - 1) = InternalRow(prev, t)
       prev = t
       i += 1
@@ -129,8 +129,8 @@ case class HasAdjacentPair(child: Expression, l: String, r: String)
     var sawNull = false
     var i = 1
     while (i < n) {
-      val a = toks.getUTF8String(i - 1)
-      val b = toks.getUTF8String(i)
+      val a = BpeExpressions.tokenAt(toks, i - 1)
+      val b = BpeExpressions.tokenAt(toks, i)
       if (a == null || b == null) {
         // (null === l) && ... can only be null-or-false; exists keeps
         // scanning and reports null only if nothing matched
@@ -146,6 +146,11 @@ case class HasAdjacentPair(child: Expression, l: String, r: String)
 }
 
 object BpeExpressions {
+  /** Token `i`, or null for a null slot — read through `isNullAt`, as
+    * the `ArrayData` contract requires before any typed getter. */
+  private[expr] def tokenAt(toks: ArrayData, i: Int): UTF8String =
+    if (toks.isNullAt(i)) null else toks.getUTF8String(i)
+
   def fuseAll(toks: Column, pairs: Seq[(String, String, String)]): Column =
     column(FuseBpeAll(expression(toks), pairs))
   def fuse(toks: Column, l: String, r: String, m: String): Column =

@@ -1,6 +1,8 @@
 package graft.functions.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -87,15 +89,14 @@ case class SumArrayField(child: Expression, fieldName: String)
     child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
   private lazy val ordinal: Int = structType.fieldIndex(fieldName)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(s: StructType, _)
           if s.fieldNames.contains(fieldName) &&
             s(s.fieldIndex(fieldName)).dataType == DoubleType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckSuccess
       case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckFailure(
           s"SumArrayField needs array<struct> with double field '$fieldName', got $other")
     }
 
@@ -202,6 +203,13 @@ case class DotProductLong(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) => TypeCheckSuccess
+      case (l, r) =>
+        TypeCheckFailure(s"DotProductLong needs (array<int>, array<int>), got ($l, $r)")
+    }
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
@@ -251,6 +259,16 @@ case class SquaredL2(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def ok(t: DataType): Boolean = t match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }
+    if (ok(left.dataType) && ok(right.dataType)) TypeCheckSuccess
+    else TypeCheckFailure("SquaredL2 needs two array<float|double>, got " +
+      s"(${left.dataType}, ${right.dataType})")
+  }
 
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -314,6 +332,13 @@ case class EntropyFold(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), LongType) => TypeCheckSuccess
+      case (l, r) =>
+        TypeCheckFailure(s"EntropyFold needs (array<bigint>, bigint), got ($l, $r)")
+    }
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val cs = a.asInstanceOf[ArrayData]
     val n = b.asInstanceOf[Long].toDouble
@@ -370,6 +395,14 @@ case class IntersectCountSorted(left: Expression, right: Expression)
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _))
+          if l == r && (l == LongType || l == StringType) => TypeCheckSuccess
+      case (l, r) => TypeCheckFailure(
+        s"IntersectCountSorted needs two array<bigint> or two array<string>, got ($l, $r)")
+    }
 
   private lazy val elemIsString: Boolean =
     left.dataType.asInstanceOf[ArrayType].elementType == StringType

@@ -33,8 +33,9 @@ import org.apache.spark.sql.functions._
   *
   * Mutation mirrors the reference's add/remove-only surface:
   * [[append]] adds files in the existing layout; [[delete]] writes
-  * rowid tombstones that readers anti-join (broadcast — tombstones
-  * are small); [[compact]] folds tombstones into a rewrite. The
+  * rowid tombstones that an open handle reads once and filters out of
+  * every scan (an `InSet` over the rowid — tombstones are small);
+  * [[compact]] folds tombstones into a rewrite. The
   * physical layout serves ONE index; other indexed columns get
   * stats-only entries that still participate in index *choice* (a
   * probe on them falls back to a full scan, identical results).
@@ -1721,7 +1722,7 @@ object IndexedStore {
     * `include` columns (for covering reads), directory-partitioned by
     * the key's hash bucket. Include values cannot go stale: the store
     * mutates by insert/tombstone only (no in-place update), and the
-    * covering read anti-joins tombstones exactly like the base path. */
+    * covering read filters tombstones out exactly like the base path. */
   private def writePostings(df: DataFrame, path: String, column: String,
       buckets: Int, include: Seq[String], overwrite: Boolean): Unit =
     df.select(col(column).as("__key") +: col(RowId) +:
@@ -1833,9 +1834,11 @@ object IndexedStore {
   /** An opened store: sidecar + file inventory resolved once, probes
     * plan against reused readers. With a [[LogView]] the base frame
     * reads exactly the logged files (basePath keeps the bucket
-    * partition column parseable) and tombstones come from the logged
-    * delete entries; without one (legacy store, pre-checkpoint
-    * generation) both fall back to directory listing. */
+    * partition column parseable) and the tombstone rowids come from
+    * the logged delete entries — read once per handle, on the first
+    * probe that needs them, and filtered out of each probe's scan;
+    * without a view (legacy store, pre-checkpoint generation) both
+    * fall back to directory listing and a per-probe anti-join. */
   final class OpenStore private[IndexedStore] (spark: SparkSession, path: String,
       view: Option[StoreView]) {
     private val props = loadProps(path)
@@ -1883,12 +1886,32 @@ object IndexedStore {
               .LogicalRelation(relation))
       }
     }
+    /** The view's tombstoned rowids, read once per handle on the first
+      * probe that needs them — the view is fixed at open, so one read
+      * serves every probe of the snapshot. The explicit schema skips
+      * parquet footer inference; null rowids are dropped (a null never
+      * equals a row's rowid, exactly as under an anti-join). Rowids are
+      * integral, so the collected values are already Catalyst's. */
+    private lazy val tombstoned: Set[Any] = view match {
+      case Some(v) if v.tombstoneFiles.nonEmpty =>
+        val schema = org.apache.spark.sql.types.StructType(
+          Seq(base.schema(RowId).copy(nullable = true)))
+        spark.read.schema(schema)
+          .parquet(v.tombstoneFiles.map(f => s"$path/$TombstoneDir/$f"): _*)
+          .collect().flatMap(r => Option(r.get(0))).toSet
+      case _ => Set.empty
+    }
+
+    /** Drop tombstoned rows with an `InSet` filter over the handle's
+      * tombstone set, evaluated in the probe's own scan stage. A null
+      * rowid stays, as it does under the legacy path's anti-join. */
     private def antiTs(df: DataFrame): DataFrame = view match {
-      case Some(v) if v.tombstoneFiles.isEmpty => df
-      case Some(v) =>
-        val ts = spark.read.parquet(
-          v.tombstoneFiles.map(f => s"$path/$TombstoneDir/$f"): _*)
-        df.join(broadcast(ts), Seq(RowId), "left_anti")
+      case Some(_) if tombstoned.isEmpty => df
+      case Some(_) =>
+        import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+        import org.apache.spark.sql.catalyst.expressions.InSet
+        df.filter(col(RowId).isNull ||
+          !column(InSet(expression(col(RowId)), tombstoned)))
       case None => antiTombstone(spark, path, df)
     }
     // Posting frames are resolved AT OPEN (spark.read.parquet lists
@@ -1947,8 +1970,8 @@ object IndexedStore {
     /** Read rows matching the ANDed conditions through the best index.
       * The index path yields a superset (bucket-pruned scan); every
       * condition is always re-applied, exactly like the reference's
-      * post-filter (lib.rs:130-137). Tombstoned rowids are anti-joined
-      * out. */
+      * post-filter (lib.rs:130-137). Tombstoned rowids are filtered
+      * out by the handle's tombstone `InSet`. */
     def find(conds: Seq[graft.core.Condition]): DataFrame = {
     val base = zonePrunedBase(conds)
     val layout = props.getProperty("layout").split(":", 3)
@@ -2085,7 +2108,7 @@ object IndexedStore {
       * candidates by lowest estimate(), not estimate()-first-then-
       * coverage — an index-only read beats a lower-estimate base read,
       * so a covering index must not be bypassed just because another
-      * index looks more selective. Tombstoned rowids anti-join out
+      * index looks more selective. Tombstoned rowids filter out
       * exactly as on the base path, and include values cannot go stale
       * (insert/tombstone only, no in-place update). Falls back to
       * find()+select — same results, base-file read — only when NO
@@ -2268,7 +2291,7 @@ object IndexedStore {
 
   /** Delete matching rows by tombstoning their rowids (reference
     * delete, lib.rs:140-169, under the add/remove-only abstraction:
-    * no in-place rewrite; readers anti-join). */
+    * no in-place rewrite; readers filter the tombstoned rowids out). */
   def delete(spark: SparkSession, rootPath: String,
       conds: Seq[graft.core.Condition]): Unit = {
     val path = resolve(rootPath)
@@ -2307,8 +2330,8 @@ object IndexedStore {
     * backfilling postings from the current contents — the reference's
     * post-hoc `Store::index` with backfill (lib.rs:195-205). Stale
     * postings for tombstoned rows are harmless: the read path prunes
-    * through postings first and anti-joins tombstones afterwards, and
-    * compact rebuilds postings from survivors. */
+    * through postings first and filters tombstoned rowids afterwards,
+    * and compact rebuilds postings from survivors. */
   def addIndex(spark: SparkSession, rootPath: String, idx: HashIndex): Unit = {
     val path = resolve(rootPath)
     val props = loadProps(path)

@@ -393,4 +393,69 @@ class ExprSpec extends SparkSpec {
       aggregate(col("cs"), lit(0.0),
         (acc, c) => acc - (c / col("n")) * log(c / col("n"))).as("b")))
   }
+
+  test("fold expressions reject mistyped input at analysis") {
+    val df = spark.range(1).select(
+      array(lit(1)).as("ai"), array(lit(1L)).as("al"),
+      array(lit(1.0)).as("ad"), array(lit("x")).as("as"),
+      lit(1).as("i"), lit(1L).as("l"))
+    val mistyped = Seq(
+      "EntropyFold(array<int>, bigint)" ->
+        FoldExpressions.entropyFold(col("ai"), col("l")),
+      "EntropyFold(array<bigint>, int)" ->
+        FoldExpressions.entropyFold(col("al"), col("i")),
+      "DotProductLong(array<bigint>, array<int>)" ->
+        FoldExpressions.dotProductLong(col("al"), col("ai")),
+      "IntersectCountSorted(array<bigint>, array<string>)" ->
+        FoldExpressions.intersectCountSorted(col("al"), col("as")),
+      "IntersectCountSorted(array<int>, array<int>)" ->
+        FoldExpressions.intersectCountSorted(col("ai"), col("ai")),
+      "SquaredL2(array<bigint>, array<double>)" ->
+        FoldExpressions.squaredL2(col("al"), col("ad")))
+    mistyped.foreach { case (what, c) =>
+      withClue(what) { intercept[org.apache.spark.sql.AnalysisException](df.select(c)) }
+    }
+    // the types each expression reads still analyze
+    df.select(FoldExpressions.entropyFold(col("al"), col("l")),
+      FoldExpressions.dotProductLong(col("ai"), col("ai")),
+      FoldExpressions.intersectCountSorted(col("as"), col("as")),
+      FoldExpressions.squaredL2(col("ad"), col("ad"))).collect()
+  }
+
+  test("BPE expressions read a null slot of an UnsafeArrayData as a null token") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.expr.{AdjacentPairs, FuseBpeAll, HasAdjacentPair}
+    val at = ArrayType(StringType, containsNull = true)
+    val u = UTF8String.fromString _
+    val row = UnsafeProjection.create(Array[DataType](at))
+      .apply(InternalRow(new GenericArrayData(Array[Any](u("a"), null, u("b"), u("a"), u("b")))))
+    assert(row.getArray(0).isInstanceOf[UnsafeArrayData] && row.getArray(0).isNullAt(1))
+    val toks = BoundReference(0, at, nullable = true)
+    def strings(v: Any): Seq[String] = {
+      val a = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      (0 until a.numElements()).map(i =>
+        if (a.isNullAt(i)) null else a.getUTF8String(i).toString)
+    }
+    // a null token never fuses and is kept in place
+    assert(strings(FuseBpeAll(toks, Seq(("a", "b", "ab"))).eval(row)) ==
+      Seq("a", null, "b", "ab"))
+    // pairs keep the null on either side
+    val pairs = AdjacentPairs(toks).eval(row)
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val got = (0 until pairs.numElements()).map { i =>
+      val s = pairs.getStruct(i, 2)
+      (if (s.isNullAt(0)) null else s.getUTF8String(0).toString,
+        if (s.isNullAt(1)) null else s.getUTF8String(1).toString)
+    }
+    assert(got == Seq(("a", null), (null, "b"), ("b", "a"), ("a", "b")))
+    // exists semantics: a match wins; else a null comparison → null;
+    // else false
+    assert(HasAdjacentPair(toks, "a", "b").eval(row) == true)
+    assert(HasAdjacentPair(toks, "q", "b").eval(row) == null)
+    assert(HasAdjacentPair(toks, "q", "z").eval(row) == false)
+  }
 }

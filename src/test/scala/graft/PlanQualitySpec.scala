@@ -653,12 +653,17 @@ class PlanQualitySpec extends SparkSpec {
       s"rank-list fusion join missing:\n${p.take(2000)}")
   }
 
-  test("log-gated store read anti-joins logged tombstones via broadcast") {
+  test("log-gated store read filters logged tombstones with an InSet, no join") {
     val p = plan("sc_log_read")
-    assert(p.contains("LeftAnti"),
-      s"tombstone anti-join missing:\n${p.take(2000)}")
-    assert(p.contains("BroadcastHashJoin"),
-      s"tombstone set not broadcast:\n${p.take(2000)}")
+    // the handle's tombstone rowids arrive as a literal set in a
+    // filter over the scan; the tombstone files are not part of the
+    // query, so nothing joins against them
+    assert(p.contains("INSET"),
+      s"tombstone InSet filter missing:\n${p.take(2000)}")
+    assert(!p.contains("LeftAnti") && !p.linesIterator.exists(_.contains("Join")),
+      s"a join over the tombstones crept back:\n${p.take(2000)}")
+    assert(!p.contains("_graft_tombstones"),
+      s"tombstone files scanned inside the query:\n${p.take(2000)}")
     assert(!p.contains("SortMergeJoin"),
       s"corpus-side shuffle join crept in:\n${p.take(2000)}")
   }

@@ -548,6 +548,75 @@ class StorageSpec extends SparkSpec {
       "compacted generation still carries a tombstone dir")
   }
 
+  /** Order-independent fingerprint of a frame's rows: the sorted
+    * per-row hashes over the columns in name order. */
+  private def rowHashes(df: DataFrame): Seq[Long] =
+    df.select(xxhash64(df.columns.sorted.map(col).toSeq: _*))
+      .collect().map(_.getLong(0)).sorted.toSeq
+
+  test("a handle serves its snapshot's tombstones through find and findCovering") {
+    val path = tmp()
+    val cust = Tables(spark, sf).customer
+    val first = Store.fromData(cust.filter(col("c_custkey") <= 100), Seq("c_custkey"))
+    IndexedStore.write(first.data, path, HashIndex("c_mktsegment", 8),
+      secondary = Seq(HashIndex("c_nationkey", 8, include = Seq("c_custkey"))))
+    val grown = first.insert(cust.filter(col("c_custkey") > 100 && col("c_custkey") <= 200))
+    IndexedStore.append(
+      grown.data.join(first.data.select(Store.RowId), Seq(Store.RowId), "left_anti"), path)
+    val building = Condition.eq("c_mktsegment", "BUILDING")
+    val nation5 = Condition.eq("c_nationkey", 5)
+    IndexedStore.delete(spark, path, Seq(building))
+    val early = IndexedStore.open(spark, path)
+    IndexedStore.delete(spark, path, Seq(nation5))
+    val late = IndexedStore.open(spark, path)
+    val proj = Seq(Store.RowId, "c_custkey", "c_nationkey")
+    def check(h: IndexedStore.OpenStore, model: Store): Unit = {
+      assert(rowHashes(h.find(Nil)) == rowHashes(model.data))
+      Seq(nation5, Condition.eq("c_nationkey", 6)).foreach { c =>
+        assert(rowHashes(h.find(Seq(c))) == rowHashes(model.find(c)))
+        assert(rowHashes(h.findCovering(Seq(c), proj)) ==
+          rowHashes(model.find(c).select(proj.map(col): _*)))
+      }
+    }
+    val afterFirst = grown.delete(building)
+    assert(afterFirst.find(nation5).count() > 0, "the later delete must remove rows")
+    // the early handle was opened before the second delete: its
+    // rowids stay visible there
+    check(early, afterFirst)
+    check(late, afterFirst.delete(nation5))
+    assert(late.find(Seq(nation5)).count() == 0)
+  }
+
+  test("a tombstoned handle reads its tombstones once, not once per probe") {
+    val path = tmp()
+    val store = Store.fromData(Tables(spark, sf).customer, Seq("c_custkey"))
+    IndexedStore.write(store.data, path, HashIndex("c_mktsegment", 8))
+    IndexedStore.delete(spark, path, Seq(Condition.eq("c_mktsegment", "BUILDING")))
+    IndexedStore.delete(spark, path, Seq(Condition.eq("c_nationkey", 3)))
+    val h = IndexedStore.open(spark, path)
+    val group = s"tombstone-probes-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val segments = Seq("AUTOMOBILE", "FURNITURE", "HOUSEHOLD", "MACHINERY")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "tombstoned probes")
+      val counts = segments.map(s =>
+        h.find(Seq(Condition.eq("c_mktsegment", s))).collect().length)
+      assert(counts.sum > 0, "empty probes prove nothing")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.GraftListenerBridge.flushListeners(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= segments.size + 1,
+      s"${jobs.get()} jobs for ${segments.size} probes: the tombstone set is re-read per probe")
+  }
+
   test("append feeds the existing layout and stays queryable") {
     val path = tmp()
     val cust = Tables(spark, sf).customer
