@@ -255,6 +255,10 @@ object Bench {
     // runs — e.g. graft.ngram.prefixOrder=df to bench an alternate plan
     // without a code edit.
     graft.core.Sessions.applyEnvConf(spark)
+    // the ICU-off session conf is only result-preserving on an
+    // all-ASCII corpus — enforced wherever queries are timed, as Verify
+    // does wherever they are checked
+    graft.core.Sessions.assertAsciiCorpus(spark, sfDir)
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (iteration/debugging).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)

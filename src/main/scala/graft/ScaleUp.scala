@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Optimization-round support tool: materialize a SCALED-UP copy of an
@@ -22,6 +22,33 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleUp <srcSfDir> <dstDir> <K>
   */
 object ScaleUp {
+  // doc_id offset ≡ 0 (mod 97) preserves the BM25 seed contract
+  private[graft] val DocOffset = 9700000L
+  private val VecOffset = 1000000L
+  private val EventOffset = 100000000L
+
+  /** `k` copies of `df`, replica i with `idCol` shifted by i·offset
+    * and then `tweak`ed. Every source id must sit below `offset`, or
+    * two replicas would share ids. */
+  private[graft] def replicate(df: DataFrame, idCol: String, offset: Long, k: Int,
+      tweak: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame = {
+    val top = df.agg(max(col(idCol))).head()
+    require(top.isNullAt(0) || top.getAs[Number](0).longValue < offset,
+      s"max($idCol) = ${top.get(0)} is not below the replica offset $offset: " +
+        "replicas would collide")
+    (0 until k).map(i =>
+      tweak(df.withColumn(idCol, col(idCol) + lit(i * offset)), i))
+      .reduce(_ unionByName _)
+  }
+
+  /** documents: replica i > 0 gets a distinct suffix token and its
+    * `n_chars` recomputed; replica 0 is the source, unchanged. */
+  private[graft] def replicateDocs(docs: DataFrame, k: Int): DataFrame =
+    replicate(docs, "doc_id", DocOffset, k, (d, i) =>
+      if (i == 0) d
+      else d.withColumn("text", concat(col("text"), lit(s" r$i")))
+        .withColumn("n_chars", length(col("text")).cast(docs.schema("n_chars").dataType)))
+
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleUp <srcSfDir> <dstDir> <K>")
     val Array(src, dst, kStr) = args
@@ -32,37 +59,13 @@ object ScaleUp {
     spark.sparkContext.setLogLevel("WARN")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dst))
 
-    // documents: doc_id offset ≡ 0 (mod 97) preserves the seed contract
-    val docs = spark.read.parquet(s"$src/documents.parquet")
-    val docOffset = 9700000L
-    (0 until k).map { i =>
-      docs.select(
-        (col("doc_id") + lit(i * docOffset)).as("doc_id"),
-        (if (i == 0) col("text")
-         else concat(col("text"), lit(s" r$i"))).as("text"),
-        col("lang"), col("source"))
-        .withColumn("n_chars", length(col("text")).cast(
-          docs.schema("n_chars").dataType))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dst/documents.parquet")
-
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    val vecOffset = 1000000L
-    (0 until k).map { i =>
-      emb.select((col("vec_id") + lit(i * vecOffset)).as("vec_id"),
-        col("label"), col("embedding"))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dst/embeddings.parquet")
-
-    val ev = spark.read.parquet(s"$src/events.parquet")
-    val evOffset = 100000000L
-    (0 until k).map { i =>
-      ev.withColumn("event_id", col("event_id") + lit(i * evOffset))
-    }.reduce(_ unionByName _)
-      .repartition(32)
-      .write.mode("overwrite").parquet(s"$dst/events.parquet")
+    def save(df: DataFrame, table: String): Unit =
+      df.repartition(32).write.mode("overwrite").parquet(s"$dst/$table.parquet")
+    save(replicateDocs(spark.read.parquet(s"$src/documents.parquet"), k), "documents")
+    save(replicate(spark.read.parquet(s"$src/embeddings.parquet"), "vec_id",
+      VecOffset, k), "embeddings")
+    save(replicate(spark.read.parquet(s"$src/events.parquet"), "event_id",
+      EventOffset, k), "events")
 
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
       .foreach { t =>

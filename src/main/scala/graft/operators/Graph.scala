@@ -518,7 +518,7 @@ object Graph {
     * rounds; web-graph eccentricities are small (~20 on crawl
     * graphs), and the cap is conf-escapable for pathological chains
     * ([[Components.MaxRounds]] rationale). */
-  private def bfsFrom(spark: SparkSession, seeds: DataFrame,
+  private[graft] def bfsFrom(spark: SparkSession, seeds: DataFrame,
       sym: DataFrame): DataFrame = {
     val maxRounds = graft.core.Confs.intConf(
       spark, "graft.graph.bfsMaxRounds", 1024)
@@ -542,9 +542,6 @@ object Graph {
         .distinct()
         .join(fr.unionByName(pr), Seq("comp", "node"), "left_anti")
     while (!done) {
-      if (rounds + 2 > maxRounds) throw new IllegalStateException(
-        s"BFS not converged after $maxRounds rounds (raise " +
-          "graft.graph.bfsMaxRounds if the graph is legitimately this deep)")
       // TWO frontier expansions per materialization/count cycle: each
       // level's wall is dominated by the driver round-trip, so
       // batching halves the loop's job count without changing the
@@ -558,20 +555,24 @@ object Graph {
       // count(), not isEmpty: one job that BOTH materializes the
       // checkpoints fully and answers the fixpoint question (isEmpty's
       // take(1) needs multiple incremental job launches to prove an
-      // empty frame — the exact case every BFS ends on).
-      if (next2.count() == 0L) {
-        // next2 empty ⟹ done after this batch; next1 may still carry
-        // the final level (its count is a cheap read of the
-        // just-materialized blocks)
-        if (next1.count() > 0L)
-          levels += next1.withColumn("d", lit((rounds + 1).toLong))
-        done = true
-      } else {
+      // empty frame — the exact case every BFS ends on). When next2
+      // is empty, next1 may still carry the final level (its count is
+      // a cheap read of the just-materialized blocks).
+      val more = next2.count() > 0L
+      val deepest =
+        if (more) rounds + 2 else if (next1.count() > 0L) rounds + 1 else rounds
+      // the cap bounds the deepest NON-EMPTY level, so a graph whose
+      // eccentricity equals the cap converges whatever its parity
+      if (deepest > maxRounds) throw new IllegalStateException(
+        s"BFS not converged after $maxRounds rounds (raise " +
+          "graft.graph.bfsMaxRounds if the graph is legitimately this deep)")
+      if (deepest > rounds)
         levels += next1.withColumn("d", lit((rounds + 1).toLong))
+      if (more) {
         levels += next2.withColumn("d", lit((rounds + 2).toLong))
         prev = next1
         frontier = next2
-      }
+      } else done = true
       rounds += 2
     }
     levels.reduce(_.unionByName(_))

@@ -19,7 +19,8 @@ object StorageOps {
     // scratch stores from an older layout can never serve a probe.
     // v3: manifest-pointer generations. v4: file-checkpointed commit
     // log (read-through-log stores). v5: checkpoints record
-    // __flen/__fmtime so the CkptFileIndex distributed read engages.
+    // __flen/__fmtime, which the CkptFileIndex — the store's only
+    // inventory read — plans splits from.
     // Source fingerprint: scratch stores derive from the sf dir's
     // parquet, and the `_done` markers outlive a testdata
     // regeneration at the same path — without this, every sc_* probe
@@ -90,9 +91,8 @@ object StorageOps {
   }
 
   /** Run `build` only when `path` has no complete store yet
-    * (manifest pointer committed, or a legacy root sidecar — the
-    * LAST artifact a store write produces; a crashed partial write is
-    * rebuilt). This lets [[prepare]] pre-build the stores outside the
+    * (a committed manifest pointer — the step that publishes a store
+    * write; a crashed partial write is rebuilt). This lets [[prepare]] pre-build the stores outside the
     * timed window — the write is a one-time indexing cost, the probe
     * is the recurring query cost, and a benchmark that conflates them
     * measures neither. */

@@ -12,19 +12,19 @@ import graft.core.{Comparison, Condition, Value}
   * straight from its commit checkpoint (`_graft_ckpt/<gen>.parquet`)
   * — the distributed checkpoint read (the Delta/Iceberg snapshot-
   * reader tier, reference README.md:7's "indexed, queryable" store
-  * surface at object-store metadata scale).
+  * surface at object-store metadata scale) and the store's ONLY
+  * inventory read: every [[IndexedStore.OpenStore]] is served by one.
   *
-  * The collected-inventory path ([[IndexedStore.readCkptData]]) pulls
-  * every file's path AND zone bounds to the driver — quantified at
-  * ~92 B/file, ~0.9 GB of driver heap at 10⁷ files, the last
-  * driver-memory watch item in the storage layer. This index instead
-  * evaluates the listing ON EXECUTORS: `listFiles` runs one Spark job
-  * over the (tiny, columnar) checkpoint, applies the probe's zone
-  * conditions inside that scan with the exact same conservative
-  * [[IndexedStore.zoneAdmits]] admission the driver path uses, and
+  * Collecting a whole inventory — every file's path AND zone bounds —
+  * to the driver costs ~92 B/file, ~0.9 GB of driver heap at 10⁷
+  * files. Above its adaptive threshold this index instead evaluates
+  * the listing ON EXECUTORS: `listFiles` runs one Spark job over the
+  * (tiny, columnar) checkpoint, applies the probe's zone conditions
+  * inside that scan with the conservative
+  * [[IndexedStore.zoneAdmits]] admission, and
   * collects ONLY the surviving (path, length, mtime) triples — driver
   * memory scales with what the probe READS, not with what the store
-  * HOLDS. Split planning needs no per-file stat because v5
+  * HOLDS. Split planning needs no per-file stat because
   * checkpoints record `__flen`/`__fmtime` alongside each path.
   *
   * Both pruning tiers ride Catalyst's OWN pushdown: `find`'s bucket
@@ -258,8 +258,8 @@ private[graft] object CkptFileIndex {
       zones: Map[String, IndexedStore.ZoneRange])
 
   /** Signature-keyed instance memo (the [[IndexedStore.readCkptData]]
-    * ckptCache discipline): a checkpoint is immutable once its commit
-    * entry exists, so repeat opens of one store generation reuse the
+    * ckptCache discipline): a checkpoint is immutable once its
+    * generation committed, so repeat opens of one store generation reuse the
     * SAME index — the adaptive tier's limit-collect job, the schema
     * footer read, and sizeInBytes all amortize to once per
     * generation instead of once per open (the sc_* micro-lines open
@@ -387,7 +387,8 @@ private[graft] object CkptFileIndex {
     * [[graft.core.Condition]] can express); anything else prunes
     * nothing. Literals convert to external Scala values so
     * [[IndexedStore.zoneCmp]] sees the same representations the
-    * collected path compares (same converters, same NTZ discipline). */
+    * checkpoint's collected bounds carry (same converters, same NTZ
+    * discipline). */
   private def zoneConds(filters: Seq[Expression]): Seq[Condition] = {
     def const(l: Literal): Option[Any] = Option(l.value)
       .map(v => CatalystTypeConverters.createToScalaConverter(l.dataType)(v))

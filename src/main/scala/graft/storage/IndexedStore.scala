@@ -148,13 +148,12 @@ object IndexedStore {
     * `_`-prefixed sibling of [[LogDir]] (not inside it) so the CDC
     * `readStream` tailing the log's JSON entries never trips over a
     * parquet directory. Lives and dies with its generation: the
-    * retention sweep prunes checkpoints alongside log entries. A
-    * generation with no checkpointed commit entry (legacy store,
-    * crashed commit) falls back to directory listing — the
-    * pre-checkpoint behavior. At very large file counts the reader's
-    * collected file list is driver-memory-bound like every
-    * Spark-provided file index; the checkpoint itself stays one
-    * columnar file. */
+    * retention sweep prunes checkpoints alongside log entries. The
+    * commit writes it BEFORE the manifest pointer swap, so every
+    * generation the manifest can point at has one — the checkpoint
+    * is the only inventory a reader ever consults, served through a
+    * [[CkptFileIndex]] (whose adaptive tier collects a small
+    * inventory once and lists a large one on executors). */
   private[graft] val CkptDir = "_graft_ckpt"
 
   /** How long a crashed writer's commit lock blocks the store before
@@ -193,7 +192,7 @@ object IndexedStore {
     * cannot provide there. In-generation mutation (append, tombstone
     * delete, addIndex) keeps its existing semantics. */
   /** The manifest's properties (`current` generation pointer, `retain`
-    * policy); empty for a legacy (pre-manifest) store. */
+    * policy, `history`); empty before the first commit. */
   private def manifestProps(path: String): Properties = {
     val f = hadoopFs(path)
     val mf = new HPath(path, ManifestFile)
@@ -205,24 +204,23 @@ object IndexedStore {
     p
   }
 
-  /** The generation name the manifest currently points at; None for
-    * a legacy (pre-manifest) store. */
+  /** The generation name the manifest currently points at; None
+    * before the first commit. */
   private def currentGenName(path: String): Option[String] =
     Option(manifestProps(path).getProperty("current"))
 
-  private def resolve(path: String): String =
-    currentGenName(path)
-      .map(g => new HPath(path, g).toString)
-      .getOrElse(path) // legacy layout: the root IS the store
+  private def currentGen(path: String): String =
+    currentGenName(path).getOrElse(throw new IllegalStateException(
+      s"no store at $path: its manifest names no current generation"))
 
-  /** True when `path` holds a complete store (manifest pointing at a
-    * committed generation, or a legacy root with its stats sidecar —
-    * the LAST file a write produces, so its presence marks a finished
-    * write). A manifest carrying only policy (e.g. [[setRetention]]
-    * before the first write) does not count. */
-  def exists(path: String): Boolean =
-    currentGenName(path).isDefined ||
-      hadoopFs(path).exists(new HPath(path, StatsFile))
+  private def resolve(path: String): String =
+    new HPath(path, currentGen(path)).toString
+
+  /** True when `path` holds a complete store: a manifest pointing at
+    * a committed generation (the pointer swap is the step that makes a
+    * write visible). A manifest carrying only policy (e.g.
+    * [[setRetention]] before the first write) does not count. */
+  def exists(path: String): Boolean = currentGenName(path).isDefined
 
   /** True when a complete store at `path` records a secondary hash
     * index on `column` — the layout-agnostic completeness check for
@@ -467,9 +465,7 @@ object IndexedStore {
   }
 
   /** Open the current generation under a reader lease (see
-    * [[LeasedStore]]). Legacy (pre-manifest) root stores cannot be
-    * leased — their handles are covered by the one-commit legacy
-    * sweep deferral instead. */
+    * [[LeasedStore]]). */
   def openLeased(spark: SparkSession, rootPath: String,
       ttlMillis: Long): LeasedStore = {
     require(ttlMillis > 0, "lease TTL must be positive")
@@ -479,9 +475,7 @@ object IndexedStore {
     val expiry =
       try math.addExact(System.currentTimeMillis(), ttlMillis)
       catch { case _: ArithmeticException => Long.MaxValue }
-    val gen = currentGenName(rootPath).getOrElse(throw new IllegalStateException(
-      s"no manifest store at $rootPath to lease (legacy root stores get " +
-        "one commit of grace from the sweep deferral instead)"))
+    val gen = currentGen(rootPath)
     val f = hadoopFs(rootPath)
     f.mkdirs(new HPath(rootPath, LeaseDir))
     val file = new HPath(new HPath(rootPath, LeaseDir),
@@ -546,28 +540,27 @@ object IndexedStore {
     * retention budget (time travel depth, [[setRetention]]).
     * Everything else in the root — superseded generations and crashed
     * partial builds (complete-looking or not: they are absent from
-    * the committed chain) — is deleted, with two exceptions: a
-    * generation pinned by an unexpired reader lease
-    * ([[openLeased]]) survives until release/expiry, and when this is
-    * the FIRST manifest commit over a legacy root store the legacy
-    * files get one commit of grace (an open legacy handle keeps
-    * reading them across this commit, symmetric with the
-    * predecessor-generation retention; the next commit reclaims
-    * them). The `writerToken` from [[beginCommit]] is re-verified
-    * right before the swap — a concurrent writer aborts loudly here
-    * instead of committing from stale manifest state. */
+    * the committed chain) — is deleted, except a generation pinned by
+    * an unexpired reader lease ([[openLeased]]), which survives until
+    * release/expiry. The `writerToken` from [[beginCommit]] is
+    * re-verified before the swap — a concurrent writer aborts loudly
+    * here instead of committing from stale manifest state.
+    *
+    * Order: everything a reader of `gen` needs (the outgoing
+    * generation's reconciled log, `gen`'s checkpoint) lands BEFORE the
+    * pointer swap, and only the commit entry follows it. A crash
+    * between the swap and the entry therefore leaves a readable
+    * generation whose entry the next mutation republishes
+    * ([[healedLogEntries]]). */
   private[graft] def commitAndSweep(path: String, gen: String,
       writerToken: String): Unit = try {
     verifyWriter(path, writerToken, gen)
     val m = manifestProps(path)
     val prev = Option(m.getProperty("current"))
     val f = hadoopFs(path)
-    // first commit over a legacy root store → defer the legacy sweep
-    val legacyGrace = prev.isEmpty && f.exists(new HPath(path, StatsFile))
     val retain = m.getProperty("retain", "1").toInt
     val kept = (prev.toSeq ++ committedChain(m).filterNot(prev.contains))
       .distinct.filterNot(_ == gen).take(retain)
-    writeManifest(path, Some(gen), retain, gen +: kept)
     // heal crash-orphaned mutations of the outgoing generation BEFORE
     // its successor's commit entry publishes: the commit diff assumes
     // consumers reconciled to prev's final state, so an unlogged
@@ -577,6 +570,7 @@ object IndexedStore {
     // reading only the orphan files themselves.
     prev.foreach(p => reconcileMutationLog(path, p, Some(Long.MaxValue)))
     writeCheckpoint(path, gen)
+    writeManifest(path, Some(gen), retain, gen +: kept)
     appendCommitLog(path, gen, prev)
     val leased = leasedGenerations(path)
     f.listStatus(new HPath(path))
@@ -584,8 +578,7 @@ object IndexedStore {
         val n = s.getPath.getName
         n != gen && !kept.contains(n) && !leased.contains(n) &&
           n != ManifestFile && n != WriterTokenFile && n != CommitLockFile &&
-          n != LeaseDir && n != LogDir && n != CkptDir &&
-          !(legacyGrace && !n.startsWith("gen-"))
+          n != LeaseDir && n != LogDir && n != CkptDir
       }
       .foreach(s => f.delete(s.getPath, true))
     // leased generations keep their CHECKPOINT artifacts too: the
@@ -673,7 +666,8 @@ object IndexedStore {
     * still under the writer token), so the log order IS the commit
     * order; the tmp+rename publish means a tailing reader never sees
     * a partial entry. `seq` is the generation's own monotone number —
-    * idempotent if a crashed commit retries the same generation. */
+    * idempotent, so [[healedLogEntries]] can republish the entry of a
+    * commit that crashed right after its swap. */
   private def appendCommitLog(path: String, gen: String,
       prev: Option[String]): Unit = {
     val seq = gen.stripPrefix("gen-").toLong
@@ -683,42 +677,23 @@ object IndexedStore {
     // the max — Store's autoincrement) can never leak into it.
     val hi = Option(loadProps(new HPath(path, gen).toString)
       .getProperty("maxrowid")).getOrElse("null")
-    // `ckpt` promises the generation's file checkpoint is readable
-    // ([[writeCheckpoint]] ran first) — the gate readers and the
-    // reconcile use for every file-granular log feature.
     publishLogEntry(path, s"$gen.json",
       s"""{"seq":$seq,"gen":"$gen","prev":${
         prev.map(p => "\"" + p + "\"").getOrElse("null")
-      },"kind":"commit","sub":0,"hi":$hi,"ckpt":1}""")
+      },"kind":"commit","sub":0,"hi":$hi}""")
   }
 
-  /** Publish one MUTATION entry (`kind` = `append` | `delete`) for the
-    * current generation — the sub-commit half of the CDC log: a store
-    * consumer otherwise only observes generation commits, but appends
-    * and tombstone deletes mutate the live generation between commits
-    * (and a tombstoned row never surfaces in a later gen-diff at all:
-    * both sides of the diff read it tombstone-free). Published AFTER
-    * the mutation's data has fully landed, so an entry exists IFF its
-    * rows/tombstones are readable — the same entry-iff-committed
-    * discipline as the commit entries. `sub` orders mutations within
-    * their generation (commit itself is sub 0); single-writer, like
-    * every in-generation mutation. Skipped for a legacy
-    * (pre-manifest) root store — there is no commit log to extend. */
-  private def appendMutationLog(rootPath: String, kind: String,
-      fields: String): Unit =
-    currentGenName(rootPath).foreach { gen =>
-      // mutation-level CDC only for generations COMMITTED BY THE
-      // CURRENT LOG FORMAT: a legacy (pre-kind) commit entry replays
-      // as the generation's live state at the consumer, so
-      // per-mutation entries on top would double-stream the same
-      // rows; a legacy store keeps the legacy contract (mutations
-      // surface through the next commit diff) until its next commit
-      if (genLogEntries(rootPath, gen).exists { case (n, body) =>
-        n == s"$gen.json" && body.contains("\"kind\"")
-      }) publishMutationEntry(rootPath, gen, kind, fields)
-    }
-
-  /** Publish `kind` for `gen` at the next free sub position. */
+  /** Publish one MUTATION entry (`kind` = `append` | `delete`) for
+    * `gen` at the next free sub position — the sub-commit half of the
+    * CDC log: a store consumer otherwise only observes generation
+    * commits, but appends and tombstone deletes mutate the live
+    * generation between commits (and a tombstoned row never surfaces
+    * in a later gen-diff at all: both sides of the diff read it
+    * tombstone-free). Published AFTER the mutation's data has fully
+    * landed, so an entry exists IFF its rows/tombstones are readable —
+    * the same entry-iff-committed discipline as the commit entries.
+    * `sub` orders mutations within their generation (commit itself is
+    * sub 0); single-writer, like every in-generation mutation. */
   private def publishMutationEntry(rootPath: String, gen: String,
       kind: String, fields: String): Unit = {
     val sub = genLogEntries(rootPath, gen).count(_._1 != s"$gen.json") + 1
@@ -744,20 +719,34 @@ object IndexedStore {
     }
   }
 
+  /** `gen`'s log entries, its commit entry first republished when the
+    * commit crashed between its pointer swap and the entry (the last
+    * step of [[commitAndSweep]]). The entry's `prev` is the next
+    * generation down the manifest's committed chain — the one that was
+    * current before `gen`. Every mutation runs through here before it
+    * logs anything, so the commit entry always precedes the
+    * generation's mutation entries. */
+  private def healedLogEntries(rootPath: String,
+      gen: String): Seq[(String, String)] = {
+    val entries = genLogEntries(rootPath, gen)
+    if (entries.exists(_._1 == s"$gen.json")) entries
+    else {
+      val chain = committedChain(manifestProps(rootPath))
+      appendCommitLog(rootPath, gen, chain.dropWhile(_ != gen).drop(1).headOption)
+      genLogEntries(rootPath, gen)
+    }
+  }
+
   /** The highest rowid the log already covers for `gen` (its commit
-    * entry's high-water mark and every logged append's) — None when
-    * the generation has no current-format commit entry. */
-  private def coveredHi(entries: Seq[(String, String)],
-      gen: String): Option[Long] = {
-    if (!entries.exists { case (n, b) =>
-      n == s"$gen.json" && b.contains("\"kind\"") }) return None
+    * entry's high-water mark and every logged append's). */
+  private def coveredHi(entries: Seq[(String, String)], gen: String): Long = {
     val HiRe = """"hi":(-?\d+)""".r
     val his = entries.collect {
       case (n, b) if n == s"$gen.json" || n.contains("-append-") =>
         HiRe.findFirstMatchIn(b).map(_.group(1).toLong)
     }.flatten
     // a hi-less commit entry = empty at commit → covered through -1
-    Some(if (his.isEmpty) -1L else his.max)
+    if (his.isEmpty) -1L else his.max
   }
 
   /** Tombstone files already named by `gen`'s logged delete entries. */
@@ -791,80 +780,59 @@ object IndexedStore {
     * CDC can never disagree. Catch-up entries restore the NET state,
     * not the original mutation order (delete-before-append is
     * possible where the crash interleaved them the other way); signed
-    * folds commute, so consumers converge regardless. No-op for a
-    * legacy-format generation (no mutation entries there at all). */
+    * folds commute, so consumers converge regardless. A missing commit
+    * entry is republished first ([[healedLogEntries]]). */
   private def reconcileMutationLog(rootPath: String, gen: String,
       appendFloor: Option[Long]): Unit = {
-    val entries = genLogEntries(rootPath, gen)
-    coveredHi(entries, gen).foreach { covered =>
-      val f = hadoopFs(rootPath)
-      val genPath = new HPath(rootPath, gen).toString
-      val tdir = new HPath(new HPath(rootPath, gen), TombstoneDir)
-      val actual =
-        if (!f.exists(tdir)) Set.empty[String]
-        else f.listStatus(tdir).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).toSet
-      val orphaned = (actual -- loggedTombstoneFiles(entries)).toSeq.sorted
-      if (orphaned.nonEmpty)
-        publishMutationEntry(rootPath, gen, "delete",
-          s""""files":"${orphaned.mkString(",")}"""")
-      if (ckptFormat(entries, gen)) {
-        if (appendFloor.exists(_ > covered)) {
-          val spark = SparkSession.active
-          val coveredFiles = checkpointFiles(spark, rootPath, gen).toSet ++
-            loggedAppendFiles(entries)
-          val orphanData = listDataFiles(genPath).filterNot(coveredFiles)
-          // per-file rowid ranges (one tiny agg per orphan — crash
-          // debris is rare and small by construction): HEAL files whose
-          // whole range lies past the covered mark; files whose whole
-          // range is ALREADY covered are a duplicate write the log never
-          // acknowledged (a recovering writer re-numbered its retry off
-          // the log's high-water mark while the crashed copy's files
-          // still sat on disk) — publishing them would double-serve
-          // those rowids to every log reader and double-emit them in the
-          // CDC, so they are DELETED instead: the log is authoritative,
-          // and an unlogged file the log already covers can only ever be
-          // debris. Rowless orphans (an aborted empty write) are debris
-          // too. A range STRADDLING the mark is impossible under the
-          // contiguous-run append contract; if one ever appears it is
-          // left untouched (invisible to log readers, surfaced again by
-          // every future reconcile) rather than guessed at.
-          val ranged = orphanData.map { rel =>
-            val r = spark.read.parquet(s"$genPath/$rel")
-              .agg(min(col(RowId)), max(col(RowId))).head()
-            (rel, if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))))
-          }
-          val heal = ranged.collect { case (rel, Some((lo, hi))) if lo > covered => (rel, lo, hi) }
-          val debris = ranged.collect {
-            case (rel, None) => rel
-            case (rel, Some((_, hi))) if hi <= covered => rel
-          }
-          debris.foreach(rel =>
-            f.delete(new HPath(genPath, rel), false): Unit)
-          if (heal.nonEmpty)
-            publishMutationEntry(rootPath, gen, "append",
-              s""""lo":${heal.map(_._2).min},"hi":${heal.map(_._3).max},""" +
-                s""""files":"${heal.map(_._1).mkString(",")}"""")
-        }
-      } else {
-        // pre-checkpoint (kind-format, no file inventory) generation:
-        // keep the original rowid-based heal — the appending caller's
-        // free bound directly, or (at commit, floor = MaxValue) one
-        // one-column scan for the actual high-water mark — catch-up
-        // anchored at covered+1 as before
-        val actualMax = appendFloor match {
-          case Some(Long.MaxValue) => scala.util.Try {
-            val r = SparkSession.active.read.parquet(genPath)
-              .agg(max(col(RowId))).head()
-            if (r.isNullAt(0)) None else Some(r.getLong(0))
-          }.toOption.flatten
-          case other => other
-        }
-        actualMax.filter(_ > covered).foreach { max =>
-          publishMutationEntry(rootPath, gen, "append",
-            s""""lo":${covered + 1},"hi":$max""")
-        }
+    val entries = healedLogEntries(rootPath, gen)
+    val covered = coveredHi(entries, gen)
+    val f = hadoopFs(rootPath)
+    val genPath = new HPath(rootPath, gen).toString
+    val tdir = new HPath(new HPath(rootPath, gen), TombstoneDir)
+    val actual =
+      if (!f.exists(tdir)) Set.empty[String]
+      else f.listStatus(tdir).map(_.getPath.getName)
+        .filter(_.endsWith(".parquet")).toSet
+    val orphaned = (actual -- loggedTombstoneFiles(entries)).toSeq.sorted
+    if (orphaned.nonEmpty)
+      publishMutationEntry(rootPath, gen, "delete",
+        s""""files":"${orphaned.mkString(",")}"""")
+    if (appendFloor.exists(_ > covered)) {
+      val spark = SparkSession.active
+      val coveredFiles = checkpointFiles(spark, rootPath, gen).toSet ++
+        loggedAppendFiles(entries)
+      val orphanData = listDataFiles(genPath).filterNot(coveredFiles)
+      // per-file rowid ranges (one tiny agg per orphan — crash
+      // debris is rare and small by construction): HEAL files whose
+      // whole range lies past the covered mark; files whose whole
+      // range is ALREADY covered are a duplicate write the log never
+      // acknowledged (a recovering writer re-numbered its retry off
+      // the log's high-water mark while the crashed copy's files
+      // still sat on disk) — publishing them would double-serve
+      // those rowids to every log reader and double-emit them in the
+      // CDC, so they are DELETED instead: the log is authoritative,
+      // and an unlogged file the log already covers can only ever be
+      // debris. Rowless orphans (an aborted empty write) are debris
+      // too. A range STRADDLING the mark is impossible under the
+      // contiguous-run append contract; if one ever appears it is
+      // left untouched (invisible to log readers, surfaced again by
+      // every future reconcile) rather than guessed at.
+      val ranged = orphanData.map { rel =>
+        val r = spark.read.parquet(s"$genPath/$rel")
+          .agg(min(col(RowId)), max(col(RowId))).head()
+        (rel, if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1))))
       }
+      val heal = ranged.collect { case (rel, Some((lo, hi))) if lo > covered => (rel, lo, hi) }
+      val debris = ranged.collect {
+        case (rel, None) => rel
+        case (rel, Some((_, hi))) if hi <= covered => rel
+      }
+      debris.foreach(rel =>
+        f.delete(new HPath(genPath, rel), false): Unit)
+      if (heal.nonEmpty)
+        publishMutationEntry(rootPath, gen, "append",
+          s""""lo":${heal.map(_._2).min},"hi":${heal.map(_._3).max},""" +
+            s""""files":"${heal.map(_._1).mkString(",")}"""")
     }
   }
 
@@ -959,9 +927,9 @@ object IndexedStore {
 
   /** Snapshot the generation's data-file inventory into its
     * [[CkptDir]] checkpoint — called inside the commit, BEFORE the
-    * commit entry publishes, so an entry carrying `"ckpt":1` promises
-    * a readable checkpoint (entry-iff-ready, like every other log
-    * artifact). One listing per commit; readers never list again.
+    * manifest pointer swap, so every generation a reader can resolve
+    * has a readable checkpoint. One listing per commit; readers never
+    * list again.
     *
     * ZONE MAPS ride the same checkpoint: alongside each file's path
     * the checkpoint records per-file `__zmin_<c>`/`__zmax_<c>` bounds
@@ -983,8 +951,7 @@ object IndexedStore {
     val files = statuses.map(_._1)
     // `__flen`/`__fmtime` ride the inventory so a reader can plan
     // parquet splits straight off the checkpoint — no per-file stat,
-    // the [[CkptFileIndex]] contract (pre-v5 checkpoints lack them
-    // and readers fall back to the collected-inventory path).
+    // the [[CkptFileIndex]] contract.
     val inventory = spark
       .createDataset(statuses)(
         org.apache.spark.sql.Encoders.tuple(
@@ -1184,9 +1151,9 @@ object IndexedStore {
       zones: Map[String, Map[String, ZoneRange]])
 
   /** Driver-side checkpoint cache: a generation's checkpoint is
-    * IMMUTABLE once its commit entry exists (writeCheckpoint's only
-    * overwrite happens before the entry publishes, and every read
-    * here is gated on that entry) — but the PATH is not a stable
+    * IMMUTABLE once the generation committed (writeCheckpoint's only
+    * overwrite happens before the pointer swap, and readers only open
+    * committed generations) — but the PATH is not a stable
     * identity: a store deleted and recreated at the same location
     * (test harnesses, CI scratch dirs, the point-ops bench) reuses
     * gen-000001 and would be served the dead store's file inventory.
@@ -1247,14 +1214,6 @@ object IndexedStore {
       gen: String): Seq[String] =
     readCkptData(spark, checkpointPath(rootPath, gen)).paths
 
-  /** True when `gen`'s commit entry promises a file checkpoint —
-    * the gate for every file-granular log feature (read-through-log,
-    * file-diff reconcile, append file tracking). */
-  private def ckptFormat(entries: Seq[(String, String)], gen: String): Boolean =
-    entries.exists { case (n, b) =>
-      n == s"$gen.json" && b.contains("\"ckpt\":1")
-    }
-
   /** Data files named by `gen`'s logged append entries (own and
     * catch-up alike). */
   private def loggedAppendFiles(entries: Seq[(String, String)]): Set[String] = {
@@ -1264,49 +1223,30 @@ object IndexedStore {
     }.filter(_.nonEmpty).toSet
   }
 
-  /** The log-resolved view of one generation: exactly the data files
-    * the commit checkpoint + logged appends cover, and the tombstone
-    * files the logged deletes name. `zones` maps each data file to its
-    * per-column min/max bounds where the checkpoint (or an append's
-    * zone sidecar) recorded them — a file absent from the map is
-    * simply never pruned. None when the generation predates file
-    * tracking (legacy store, pre-checkpoint commit entry, or a
-    * crashed commit whose entry never published) — the reader then
-    * falls back to directory listing, the pre-checkpoint behavior. */
-  private[graft] sealed trait StoreView { def tombstoneFiles: Seq[String] }
-
-  private[graft] final case class LogView(dataFiles: Seq[String],
-      tombstoneFiles: Seq[String],
-      zones: Map[String, Map[String, ZoneRange]]) extends StoreView
-
-  /** The DISTRIBUTED-read sibling of [[LogView]]: instead of a
-    * collected inventory, the reader carries the checkpoint parquet's
-    * location and lets a [[CkptFileIndex]] evaluate listing + zone
-    * pruning on executors ([[CkptFileIndex]] scaladoc — the last
-    * driver-memory watch item). Only the bounded parts stay
-    * driver-side: post-checkpoint append files (O(mutations), stat'ed
-    * once with their sidecar zones) and tombstone file names. Chosen
-    * by [[logView]] when `graft.store.ckptFileIndex` is on AND the
-    * checkpoint records file lengths (v5+); pre-v5 checkpoints fall
-    * back to the collected path. */
+  /** The view of one generation a handle reads: the commit
+    * checkpoint's location (a [[CkptFileIndex]] lists and zone-prunes
+    * it — [[CkptFileIndex]] scaladoc), the data files logged appends
+    * added since (O(mutations), stat'ed once, zone-bounded by their
+    * append sidecars) and the tombstone files logged deletes name. A
+    * file is visible IFF the checkpoint or a published entry names it.
+    * Built the same way whether or not the generation's commit entry
+    * has published: the checkpoint lands before the pointer swap
+    * ([[commitAndSweep]]). */
   private[graft] final case class CkptView(ckptParquet: String,
       extras: Seq[CkptFileIndex.ExtraFile],
-      tombstoneFiles: Seq[String]) extends StoreView
+      tombstoneFiles: Seq[String])
 
   private def logView(spark: SparkSession, rootPath: String,
-      gen: String): Option[StoreView] = {
-    if (!graft.core.Confs.boolConf(spark, "graft.store.logRead",
-        default = true)) return None
+      gen: String): CkptView = {
     val entries = genLogEntries(rootPath, gen)
-    if (!ckptFormat(entries, gen)) None
-    else {
-      // append zone sidecars, each promised by its entry's zmap field
-      // (entry-iff-ready, like every log artifact); a sidecar that
-      // fails to load costs pruning on its files, never correctness.
-      // With the tier off, skip the sidecar reads entirely — pruning
-      // is disabled anyway and open() shouldn't pay for it.
-      val ZmapRe = """"zmap":"([^"]+)"""".r
-      def appendZones = if (!zonemapEnabled(spark)) Map.empty[String, Map[String, ZoneRange]]
+    // append zone sidecars, each promised by its entry's zmap field
+    // (entry-iff-ready, like every log artifact); a sidecar that
+    // fails to load costs pruning on its files, never correctness.
+    // With the tier off, skip the sidecar reads entirely — pruning
+    // is disabled anyway and open() shouldn't pay for it.
+    val ZmapRe = """"zmap":"([^"]+)"""".r
+    val appendZones =
+      if (!zonemapEnabled(spark)) Map.empty[String, Map[String, ZoneRange]]
       else entries.iterator.flatMap { case (_, b) =>
         ZmapRe.findFirstMatchIn(b).map(_.group(1))
       }.flatMap { name =>
@@ -1314,42 +1254,14 @@ object IndexedStore {
           new HPath(new HPath(rootPath, CkptDir), name).toString).zones)
           .getOrElse(Map.empty)
       }.toMap
-      val ckptPath = checkpointPath(rootPath, gen)
-      // Distributed-read path: keep the inventory OUT of the driver
-      // when the checkpoint can serve split planning itself (v5+,
-      // records __flen). Any failure assembling it (unstatable append
-      // file, unreadable footer) falls back to the collected view —
-      // the read must never get a weaker answer from a stronger tier.
-      val ckptView: Option[StoreView] =
-        if (!ckptFileIndexEnabled(spark)) None
-        else scala.util.Try {
-          if (!spark.read.parquet(ckptPath).schema.fieldNames.contains("__flen")) None
-          else {
-            val genPath = new HPath(rootPath, gen).toString
-            val zonesByFile = appendZones
-            val extras = loggedAppendFiles(entries).toSeq.sorted.map { f =>
-              val (len, mtime) = statDataFile(genPath, f)
-              CkptFileIndex.ExtraFile(f, len, mtime,
-                zonesByFile.getOrElse(f, Map.empty))
-            }
-            Some(CkptView(ckptPath, extras,
-              loggedTombstoneFiles(entries).toSeq.sorted))
-          }
-        }.toOption.flatten
-      ckptView.orElse {
-        val ckpt = readCkptData(spark, ckptPath)
-        Some(LogView(
-          (ckpt.paths ++ loggedAppendFiles(entries)).distinct.sorted,
-          loggedTombstoneFiles(entries).toSeq.sorted,
-          ckpt.zones ++ appendZones))
-      }
+    val genPath = new HPath(rootPath, gen).toString
+    val extras = loggedAppendFiles(entries).toSeq.sorted.map { f =>
+      val (len, mtime) = statDataFile(genPath, f)
+      CkptFileIndex.ExtraFile(f, len, mtime, appendZones.getOrElse(f, Map.empty))
     }
+    CkptView(checkpointPath(rootPath, gen), extras,
+      loggedTombstoneFiles(entries).toSeq.sorted)
   }
-
-  /** The distributed checkpoint read ([[CkptFileIndex]]); `false`
-    * forces the collected-inventory path. */
-  private def ckptFileIndexEnabled(spark: SparkSession): Boolean =
-    graft.core.Confs.boolConf(spark, "graft.store.ckptFileIndex", default = true)
 
   /** (length, mtime) of one generation-relative data file — used only
     * for the O(mutations) post-checkpoint append files; checkpointed
@@ -1391,14 +1303,8 @@ object IndexedStore {
     }
   }
 
-  /** TEST HOOK: build a LEGACY (pre-manifest) root-layout store — the
-    * migration source the legacy-grace sweep deferral exists for. */
-  private[graft] def writeLegacyForTest(df: DataFrame, path: String,
-      primary: IndexSpec): Unit =
-    writeLayout(df, path, primary, Nil, Nil, Nil)
-
-  /** Build one complete store generation at `path` (a generation dir,
-    * or a bare dir for the pre-manifest tests). */
+  /** Build one complete store generation at `path`, a generation
+    * dir. */
   private def writeLayout(df: DataFrame, path: String, primary: IndexSpec,
       statsOnly: Seq[IndexSpec], secondary: Seq[HashIndex],
       bloom: Seq[String]): Unit = {
@@ -1797,23 +1703,19 @@ object IndexedStore {
     * invalidated, lib.rs — the distributed analog has to be an
     * explicit lease.)
     *
-    * Reads go THROUGH the commit log where one exists ([[logView]]):
-    * the handle's file set comes from the generation's checkpoint +
-    * logged mutation entries, never a data-directory listing — a file
-    * is visible IFF its entry published, closing the crash window by
-    * construction (`graft.store.logRead=false` forces the listing
-    * fallback; legacy stores always use it). The resolved view makes
+    * Reads go THROUGH the commit log ([[logView]]): the handle's
+    * file set comes from the generation's checkpoint + logged
+    * mutation entries, never a data-directory listing — a file is
+    * visible IFF the checkpoint or a published entry names it,
+    * closing the crash window by construction. The resolved view makes
     * the handle a consistent SNAPSHOT: in-generation mutations that
     * land after open() are not visible through it (open again to see
     * them) — the distributed analog of the reference's borrow rule
     * that no mutation can happen while a shared `&Store` is live. */
-  def open(spark: SparkSession, path: String): OpenStore =
-    currentGenName(path) match {
-      case Some(g) =>
-        new OpenStore(spark, new HPath(path, g).toString,
-          logView(spark, path, g))
-      case None => new OpenStore(spark, path, None)
-    }
+  def open(spark: SparkSession, path: String): OpenStore = {
+    val g = currentGen(path)
+    new OpenStore(spark, new HPath(path, g).toString, logView(spark, path, g))
+  }
 
   /** Time travel: open a NAMED generation (one of [[generations]])
     * instead of the one the manifest points at. Every generation is a
@@ -1831,47 +1733,30 @@ object IndexedStore {
       logView(spark, rootPath, gen))
   }
 
-  /** An opened store: sidecar + file inventory resolved once, probes
-    * plan against reused readers. With a [[LogView]] the base frame
-    * reads exactly the logged files (basePath keeps the bucket
-    * partition column parseable) and the tombstone rowids come from
+  /** An opened store: sidecar + [[CkptView]] resolved once, probes
+    * plan against reused readers. The base frame is a
+    * [[CkptFileIndex]]-backed relation: the file inventory never
+    * collects past the index's adaptive tier, and bucket/zone
+    * predicates reach its listing through Catalyst's own pushdown
+    * (partitionFilters / dataFilters). The tombstone rowids come from
     * the logged delete entries — read once per handle, on the first
-    * probe that needs them, and filtered out of each probe's scan;
-    * without a view (legacy store, pre-checkpoint generation) both
-    * fall back to directory listing and a per-probe anti-join. */
+    * probe that needs them, and filtered out of each probe's scan. */
   final class OpenStore private[IndexedStore] (spark: SparkSession, path: String,
-      view: Option[StoreView]) {
+      view: CkptView) {
     private val props = loadProps(path)
-    private val base = view match {
-      // distributed checkpoint read: the file inventory never
-      // collects to the driver — a CkptFileIndex-backed relation
-      // evaluates listing + zone pruning on executors, and bucket/
-      // zone predicates arrive through Catalyst's own pushdown
-      // (partitionFilters / dataFilters). Only the data SCHEMA is
-      // resolved eagerly, from one sample footer.
-      case Some(v: CkptView) => ckptIndexedBase(v)
-      case Some(v: LogView) if v.dataFiles.nonEmpty =>
-        spark.read.option("basePath", path)
-          .parquet(v.dataFiles.map(f => s"$path/$f"): _*)
-      // a generation committed empty with no logged appends: serve an
-      // EMPTY frame, not a directory fallback — any parquet physically
-      // there is by definition unlogged (a crashed append), and the
-      // visible-iff-logged contract must hold in exactly that window;
-      // schema comes from whatever the directory holds when inferable
-      // (a truly file-less directory fails the read, as it always did)
-      case Some(_) => spark.read.parquet(path).filter(lit(false))
-      case None => spark.read.parquet(path)
-    }
 
-    /** Build the [[CkptFileIndex]]-served base relation. Schema comes
-      from ONE leaf footer (appends share the layout schema by
-      construction — append() writes through the same frame shape);
-      an empty generation (no checkpointed files, no appends) keeps
-      the visible-iff-logged empty frame. */
-    private def ckptIndexedBase(v: CkptView): DataFrame = {
+    /** Schema comes from ONE leaf footer (appends share the layout
+      * schema by construction — append() writes through the same frame
+      * shape); an empty generation (no checkpointed files, no appends)
+      * serves an EMPTY frame, not a directory read — any parquet
+      * physically there is by definition unlogged (a crashed append),
+      * and the visible-iff-logged contract must hold in exactly that
+      * window. Its schema comes from whatever the directory holds when
+      * inferable (a truly file-less directory fails the read). */
+    private val base: DataFrame = {
       // signature-keyed memo: repeat opens of one generation reuse
       // the index (its collect-tier job, schema footer, sizeInBytes)
-      val fi = CkptFileIndex.cached(spark, path, v.ckptParquet, v.extras,
+      val fi = CkptFileIndex.cached(spark, path, view.ckptParquet, view.extras,
         bucketed = true)
       fi.dataSchemaOpt match {
         case None => spark.read.parquet(path).filter(lit(false))
@@ -1886,34 +1771,34 @@ object IndexedStore {
               .LogicalRelation(relation))
       }
     }
+
     /** The view's tombstoned rowids, read once per handle on the first
       * probe that needs them — the view is fixed at open, so one read
       * serves every probe of the snapshot. The explicit schema skips
       * parquet footer inference; null rowids are dropped (a null never
       * equals a row's rowid, exactly as under an anti-join). Rowids are
       * integral, so the collected values are already Catalyst's. */
-    private lazy val tombstoned: Set[Any] = view match {
-      case Some(v) if v.tombstoneFiles.nonEmpty =>
+    private lazy val tombstoned: Set[Any] =
+      if (view.tombstoneFiles.isEmpty) Set.empty
+      else {
         val schema = org.apache.spark.sql.types.StructType(
           Seq(base.schema(RowId).copy(nullable = true)))
         spark.read.schema(schema)
-          .parquet(v.tombstoneFiles.map(f => s"$path/$TombstoneDir/$f"): _*)
+          .parquet(view.tombstoneFiles.map(f => s"$path/$TombstoneDir/$f"): _*)
           .collect().flatMap(r => Option(r.get(0))).toSet
-      case _ => Set.empty
-    }
+      }
 
     /** Drop tombstoned rows with an `InSet` filter over the handle's
       * tombstone set, evaluated in the probe's own scan stage. A null
-      * rowid stays, as it does under the legacy path's anti-join. */
-    private def antiTs(df: DataFrame): DataFrame = view match {
-      case Some(_) if tombstoned.isEmpty => df
-      case Some(_) =>
+      * rowid stays, as it would under an anti-join. */
+    private def antiTs(df: DataFrame): DataFrame =
+      if (tombstoned.isEmpty) df
+      else {
         import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
         import org.apache.spark.sql.catalyst.expressions.InSet
         df.filter(col(RowId).isNull ||
           !column(InSet(expression(col(RowId)), tombstoned)))
-      case None => antiTombstone(spark, path, df)
-    }
+      }
     // Posting frames are resolved AT OPEN (spark.read.parquet lists
     // the posting dir and pins its file index immediately), so the
     // handle's snapshot contract covers the covering-read path too —
@@ -1933,47 +1818,14 @@ object IndexedStore {
     private def posting(c: String): DataFrame =
       postings.getOrElseUpdate(c, spark.read.parquet(postingDir(path, c)))
 
-    /** ZONE-MAP file skipping: rebuild the base reader over only the
-      * files whose checkpointed min/max bounds can overlap the probe
-      * conditions — pruning INSIDE surviving buckets, before any
-      * parquet footer opens (the Iceberg/Delta data-skipping tier;
-      * row-group stats then prune further inside the kept files). A
-      * file without bounds for a probed column is always admitted, so
-      * the result is a superset and the find() re-filter keeps it
-      * exact — the same contract as every other access path here.
-      * `graft.store.zonemap=false` disables the tier. */
-    private def zonePrunedBase(conds: Seq[graft.core.Condition]): DataFrame =
-      view match {
-        // CkptView: the FileIndex already zone-prunes from the pushed
-        // dataFilters at plan time — nothing to rebuild here
-        case Some(_: CkptView) => base
-        case Some(v: LogView) if v.dataFiles.nonEmpty && v.zones.nonEmpty &&
-            conds.nonEmpty && IndexedStore.zonemapEnabled(spark) =>
-          val keep = v.dataFiles.filter(f =>
-            zoneAdmits(v.zones.getOrElse(f, Map.empty), conds))
-          if (keep.size == v.dataFiles.size) base
-          else if (keep.isEmpty) base.filter(lit(false))
-          else {
-            val slim = spark.read.option("basePath", path)
-              .parquet(keep.map(f => s"$path/$f"): _*)
-            // schema-evolution guard: the slimmer reader must still
-            // carry every column the full view does (parquet schema
-            // inference follows the file set) — otherwise skip the
-            // tier rather than change what a probe can select
-            if (slim.schema.fieldNames.sorted.sameElements(
-                base.schema.fieldNames.sorted)) slim
-            else base
-          }
-        case _ => base
-      }
-
     /** Read rows matching the ANDed conditions through the best index.
       * The index path yields a superset (bucket-pruned scan); every
       * condition is always re-applied, exactly like the reference's
-      * post-filter (lib.rs:130-137). Tombstoned rowids are filtered
-      * out by the handle's tombstone `InSet`. */
+      * post-filter (lib.rs:130-137). The re-filter also reaches the
+      * [[CkptFileIndex]] as data filters, which zone-prune its file
+      * listing. Tombstoned rowids are filtered out by the handle's
+      * tombstone `InSet`. */
     def find(conds: Seq[graft.core.Condition]): DataFrame = {
-    val base = zonePrunedBase(conds)
     val layout = props.getProperty("layout").split(":", 3)
     val chosen = chooseIndexIn(props, conds)
     val pruned = chosen match {
@@ -2150,16 +2002,6 @@ object IndexedStore {
     }
   }
 
-  private def antiTombstone(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
-    val tdir = new HPath(path, TombstoneDir)
-    val f = hadoopFs(path)
-    if (f.exists(tdir) &&
-        f.listStatus(tdir).exists(_.getPath.getName.endsWith(".parquet"))) {
-      val ts = spark.read.parquet(tdir.toString)
-      df.join(broadcast(ts), Seq(RowId), "left_anti")
-    } else df
-  }
-
   /** Append a batch in the existing layout (reference insert,
     * lib.rs:178-187: new rows are fed to the maintained index). Row
     * count stats are refreshed; NDV goes stale until compact — the
@@ -2172,7 +2014,8 @@ object IndexedStore {
       .mkString("|")
 
   def append(df: DataFrame, rootPath: String): Unit = {
-    val path = resolve(rootPath)
+    val gen = currentGen(rootPath)
+    val path = new HPath(rootPath, gen).toString
     val props = loadProps(path)
     val layout = props.getProperty("layout").split(":", 3)
     // In-generation schema widening is UNSUPPORTED by construction:
@@ -2182,18 +2025,15 @@ object IndexedStore {
     // one would NULL-pad, and a re-typed column would poison half the
     // footers. Enforce the contract loudly at write time against the
     // schema recorded in the generation's props (zero extra I/O;
-    // name AND type). A legacy generation without the recorded
-    // property keeps the pre-guard behavior.
-    Option(props.getProperty("schema.cols")).foreach { spec =>
-      val expected = spec.split("\\|").filter(_.nonEmpty).toSet
-      val incoming = schemaSpecOf(df).split("\\|").filter(_.nonEmpty).toSet
-      require(incoming == expected,
-        s"append schema must match the generation's layout schema " +
-          s"(extra: ${(incoming -- expected).toSeq.sorted.mkString(",")}; " +
-          s"missing: ${(expected -- incoming).toSeq.sorted.mkString(",")}) — " +
-          "in-generation schema widening is unsupported (the relation's " +
-          "data schema comes from a single leaf footer)")
-    }
+    // name AND type).
+    val expected = props.getProperty("schema.cols").split("\\|").filter(_.nonEmpty).toSet
+    val incoming = schemaSpecOf(df).split("\\|").filter(_.nonEmpty).toSet
+    require(incoming == expected,
+      s"append schema must match the generation's layout schema " +
+        s"(extra: ${(incoming -- expected).toSeq.sorted.mkString(",")}; " +
+        s"missing: ${(expected -- incoming).toSeq.sorted.mkString(",")}) — " +
+        "in-generation schema widening is unsupported (the relation's " +
+        "data schema comes from a single leaf footer)")
     // one pass for the stats refresh AND the CDC entry's rowid range
     // (an appended batch is a contiguous rowid run — Store numbers
     // inserts after the current max); computed from the INPUT, before
@@ -2201,11 +2041,10 @@ object IndexedStore {
     // nothing landed and the crash-recovery reconcile below cannot
     // mistake this batch's own files for a crashed predecessor's
     val stats = df.agg(count(lit(1)), min(col(RowId)), max(col(RowId))).head()
-    // ONE log-dir read serves the format check and the high-water
-    // mark; only the (rare) crash-recovery reconcile re-lists
-    val genEntries = currentGenName(rootPath)
-      .map(g => (g, genLogEntries(rootPath, g)))
-    val tracked = genEntries.exists { case (g, es) => ckptFormat(es, g) }
+    // ONE log-dir read serves the commit-entry heal and the
+    // high-water mark; only the (rare) crash-recovery reconcile
+    // re-lists
+    val covered = coveredHi(healedLogEntries(rootPath, gen), gen)
     if (stats.getLong(0) > 0L) {
       val (n, lo, hi) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
       // the CDC entry PUBLISHES [lo,hi] as the batch — a gappy or
@@ -2214,22 +2053,19 @@ object IndexedStore {
       require(n == hi - lo + 1, s"append batch rowids must be one " +
         s"contiguous run ($n rows over [$lo,$hi]) — the Store.insert " +
         "numbering contract the CDC entry publishes")
-      genEntries.foreach { case (gen, es) =>
-        val covered = coveredHi(es, gen)
-        require(covered.forall(lo > _), s"append batch [$lo,$hi] " +
-          s"overlaps rowids the log already covers (≤${covered.getOrElse(-1L)})")
-        // free crash-recovery check: this batch's lo bounds any
-        // unlogged predecessor run (a crashed earlier append); skipped
-        // entirely when the bound proves no gap exists
-        if (covered.exists(c => lo - 1 > c))
-          reconcileMutationLog(rootPath, gen, Some(lo - 1))
-      }
+      require(lo > covered, s"append batch [$lo,$hi] " +
+        s"overlaps rowids the log already covers (≤$covered)")
+      // free crash-recovery check: this batch's lo bounds any
+      // unlogged predecessor run (a crashed earlier append); skipped
+      // entirely when the bound proves no gap exists
+      if (lo - 1 > covered)
+        reconcileMutationLog(rootPath, gen, Some(lo - 1))
     }
     // file tracking: the listing diff around the data write is what
     // the append entry names, making the appended files visible to
     // log-gated readers (a production impl would capture them from
     // the committer's task manifests instead of a second LIST)
-    val before = if (tracked) listDataFiles(path).toSet else Set.empty[String]
+    val before = listDataFiles(path).toSet
     val out = layout(0) match {
       case "hash" =>
         df.withColumn(BucketCol, pmod(hash(col(layout(1))), lit(layout(2).toInt)))
@@ -2245,9 +2081,7 @@ object IndexedStore {
           .sortWithinPartitions(col(colsN.head))
     }
     out.write.mode("append").partitionBy(BucketCol).parquet(path)
-    val added =
-      if (tracked) (listDataFiles(path).toSet -- before).toSeq.sorted
-      else Seq.empty[String]
+    val added = (listDataFiles(path).toSet -- before).toSeq.sorted
     // Maintain every secondary posting index and bloom sidecar,
     // mirroring the reference's on-insert index updates
     // (lib.rs:178-187).
@@ -2271,9 +2105,9 @@ object IndexedStore {
       // write executes the scan, so the whole attempt is fallible:
       // a failure just drops the zmap field (files admitted, never
       // pruned) — an append must not fail for an optimization tier.
-      val zmapField = genEntries.collect {
-        case (gen, _) if added.nonEmpty &&
-            zonemapEnabled(SparkSession.active) =>
+      val zmapField =
+        if (added.isEmpty || !zonemapEnabled(SparkSession.active)) ""
+        else {
           val name = s"$gen-append-z$lo.parquet"
           zoneStatsFrame(SparkSession.active, gen, path,
               added.map(f => s"$path/$f"), props).flatMap { zs =>
@@ -2283,8 +2117,8 @@ object IndexedStore {
               s""","zmap":"$name""""
             }.toOption
           }.getOrElse("")
-      }.getOrElse("")
-      appendMutationLog(rootPath, "append",
+        }
+      publishMutationEntry(rootPath, gen, "append",
         s""""lo":$lo,"hi":$hi$filesField$zmapField""")
     }
   }
@@ -2294,8 +2128,13 @@ object IndexedStore {
     * no in-place rewrite; readers filter the tombstoned rowids out). */
   def delete(spark: SparkSession, rootPath: String,
       conds: Seq[graft.core.Condition]): Unit = {
-    val path = resolve(rootPath)
-    val victims = find(spark, path, conds).select(RowId).cache()
+    val gen = currentGen(rootPath)
+    val path = new HPath(rootPath, gen).toString
+    // free crash-recovery check: tombstone files no delete entry names
+    // yet are a crashed delete's — catch them up (and a crashed
+    // commit's entry) before the victims are read through the log
+    reconcileMutationLog(rootPath, gen, None)
+    val victims = open(spark, rootPath).find(conds).select(RowId).cache()
     try {
       // A no-op delete writes nothing and logs nothing — Spark would
       // otherwise materialize a schema-only empty part file, and the
@@ -2307,11 +2146,6 @@ object IndexedStore {
           if (!f.exists(tdir)) Set.empty
           else f.listStatus(tdir).map(_.getPath.getName)
             .filter(_.endsWith(".parquet")).toSet
-        // free crash-recovery check: tombstone files no delete entry
-        // names yet are a crashed delete's — catch them up before
-        // this delete adds its own
-        currentGenName(rootPath).foreach(g =>
-          reconcileMutationLog(rootPath, g, None))
         val before = tombstoneFiles
         victims.write.mode("append").parquet(tdir.toString)
         // The CDC record names exactly this delete's tombstone files —
@@ -2320,7 +2154,7 @@ object IndexedStore {
         // like the tombstone append itself.
         val added = (tombstoneFiles -- before).toSeq.sorted
         if (added.nonEmpty)
-          appendMutationLog(rootPath, "delete",
+          publishMutationEntry(rootPath, gen, "delete",
             s""""files":"${added.mkString(",")}"""")
       }
     } finally victims.unpersist(): Unit
@@ -2381,12 +2215,10 @@ object IndexedStore {
     * manifest-pointer swap: a crash at ANY point leaves the old
     * generation live (a half-built gen dir is swept by the next
     * commit), and open handles keep reading the generation they
-    * resolved. A legacy (pre-manifest) store compacts INTO the
-    * manifest layout: its root files become gen-000001's
-    * predecessor and are swept after the pointer lands. */
+    * resolved. */
   def compact(spark: SparkSession, rootPath: String): Unit = {
-    val cur = resolve(rootPath)
-    val props = loadProps(cur)
+    val cur = currentGen(rootPath)
+    val props = loadProps(new HPath(rootPath, cur).toString)
     val layout = props.getProperty("layout").split(":", 3)
     // Heal the outgoing generation FIRST, then rebuild from the
     // log-gated view: catch-ups make crashed-but-unlogged mutations
@@ -2394,8 +2226,7 @@ object IndexedStore {
     // reconcile swept (duplicate rowids the log already covers) can
     // never be resurrected into the new generation — a directory read
     // here would bake such duplicates in permanently.
-    currentGenName(rootPath).foreach(g =>
-      reconcileMutationLog(rootPath, g, Some(Long.MaxValue)))
+    reconcileMutationLog(rootPath, cur, Some(Long.MaxValue))
     val live = open(spark, rootPath).find(Nil)
     val spec: IndexSpec = layout(0) match {
       case "hash" => HashIndex(layout(1), layout(2).toInt)

@@ -171,19 +171,15 @@ object StoreStream {
         raw.join(rids, Seq(IndexedStore.RowId))
           .select(Keep.head, Keep.tail: _*).withColumn("change", lit("removed"))
       case _ =>
-        // A current-code commit entry ALWAYS carries `hi` when the
-        // generation had rows, so hi-absent means empty-at-commit —
-        // falling back to the generation's live state here would
-        // double-stream any in-generation append that landed before
-        // this consumer got here (it streams under its own entry).
-        // Only a legacy pre-kind entry (no mutation entries can
-        // coexist with it) may read the live state.
-        val cur = (e.kind, e.hi) match {
-          case (_, Some(hi)) => raw.filter(col(IndexedStore.RowId) <= hi)
+        // A commit entry ALWAYS carries `hi` when the generation had
+        // rows, so hi-absent means empty-at-commit — reading the
+        // generation's live state here would double-stream any
+        // in-generation append that landed before this consumer got
+        // here (it streams under its own entry).
+        val cur = e.hi match {
+          case Some(hi) => raw.filter(col(IndexedStore.RowId) <= hi)
             .select(Keep.head, Keep.tail: _*)
-          case ("legacy", None) => IndexedStore.openAt(spark, path, e.gen)
-            .find(Nil).select(Keep.head, Keep.tail: _*)
-          case (_, None) =>
+          case None =>
             // empty-at-commit: the generation directory may hold NO
             // parquet part files at all, so build the empty frame
             // from the entry's own schema instead of reading the dir
@@ -214,7 +210,7 @@ object StoreStream {
       .collect()
       .map(r => LogEntry(r.getLong(0), r.getString(1),
         Option(r.getString(2)),
-        Option(r.getString(3)).getOrElse("legacy"),
+        r.getString(3),
         if (r.isNullAt(4)) 0L else r.getLong(4),
         if (r.isNullAt(5)) None else Some(r.getLong(5)),
         if (r.isNullAt(6)) None else Some(r.getLong(6)),

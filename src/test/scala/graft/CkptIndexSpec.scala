@@ -14,8 +14,7 @@ import graft.storage.{CkptFileIndex, HashIndex, IndexedStore}
   * collect its survivors, never the inventory — and both pruning
   * tiers (bucket partition filters, zone data filters) must arrive
   * through Catalyst's own pushdown. Results are pinned identical to
-  * the collected-inventory fallback (`graft.store.ckptFileIndex=
-  * false`). */
+  * the source rows filtered by the same condition. */
 class CkptIndexSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
@@ -99,19 +98,14 @@ class CkptIndexSpec extends SparkSpec {
     val store = Store.fromData(Tables(spark, sf).customer, Seq("c_custkey"))
     IndexedStore.write(store.data, path, HashIndex("c_mktsegment", 8))
     val conds = Seq(Condition.eq("c_mktsegment", "MACHINERY"))
-    val viaIndex = IndexedStore.find(spark, path, conds).collect().toSet
+    val cols = store.data.columns.toSeq.map(org.apache.spark.sql.functions.col)
+    val viaIndex = IndexedStore.find(spark, path, conds).select(cols: _*)
+      .collect().toSet
     fileIndexOf(IndexedStore.open(spark, path).find(conds)) // asserts the tier engaged
-    spark.conf.set("graft.store.ckptFileIndex", "false")
-    val viaCollect =
-      try IndexedStore.find(spark, path, conds).collect().toSet
-      finally spark.conf.unset("graft.store.ckptFileIndex")
-    assert(viaIndex.nonEmpty && viaIndex == viaCollect,
-      "distributed and collected checkpoint reads diverge")
-    intercept[IllegalArgumentException] {
-      spark.conf.set("graft.store.ckptFileIndex", "fals")
-      try IndexedStore.open(spark, path)
-      finally spark.conf.unset("graft.store.ckptFileIndex")
-    }
+    val expected = store.data.filter(Condition.all(conds)).select(cols: _*)
+      .collect().toSet
+    assert(viaIndex.nonEmpty && viaIndex == expected,
+      "the checkpoint-served read diverges from the source rows")
   }
 
   test("inputFiles is bounded — a huge inventory fails loudly, never collects") {

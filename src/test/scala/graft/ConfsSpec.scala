@@ -71,4 +71,31 @@ class ConfsSpec extends SparkSpec {
     val ex = intercept[IllegalArgumentException](Confs.parseInt("SOME_ENV", "x"))
     assert(ex.getMessage.contains("SOME_ENV"))
   }
+
+  test("every graft.* key a Confs reader takes is in README's Session confs table, and no other") {
+    def files(d: java.io.File): Seq[java.io.File] =
+      if (d.isDirectory) d.listFiles().toSeq.flatMap(files)
+      else if (d.getName.endsWith(".scala")) Seq(d) else Nil
+    val sources = files(new java.io.File("src/main/scala")).map(f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    assert(sources.nonEmpty, "no main sources found from the project root")
+    // every reader call must pass its key as a literal, so the set
+    // below is complete rather than a lower bound
+    val ReaderCall = """Confs\.(?:enumConf|boolConf|intConf)\(""".r
+    val LiteralKey = """Confs\.(?:enumConf|boolConf|intConf)\(\s*[^,()]+,\s*"(graft\.[^"]+)"""".r
+    val calls = sources.map(ReaderCall.findAllMatchIn(_).size).sum
+    val inCode = sources.flatMap(LiteralKey.findAllMatchIn(_).map(_.group(1)))
+    assert(inCode.size == calls,
+      s"$calls Confs reader calls but ${inCode.size} literal graft.* keys")
+    val readme = scala.io.Source.fromFile("README.md", "UTF-8")
+    val lines = try readme.getLines().toSeq finally readme.close()
+    val section = lines.dropWhile(_ != "## Session confs").drop(1)
+      .takeWhile(!_.startsWith("## "))
+    val KeyCell = """\| `(graft\.[^`]+)` \|.*""".r
+    val inTable = section.collect { case KeyCell(k) => k }
+    assert(inTable.nonEmpty, "README has no Session confs table")
+    val (code, table) = (inCode.toSet, inTable.toSet)
+    assert((code -- table).isEmpty, s"read in code, missing from README: ${code -- table}")
+    assert((table -- code).isEmpty, s"in README, read nowhere: ${table -- code}")
+  }
 }

@@ -347,6 +347,25 @@ class GraphSpec extends SparkSpec {
     } finally spark.conf.unset("graft.graph.bfsMaxRounds")
   }
 
+  test("graft.graph.bfsMaxRounds caps the deepest level: eccentricity 3 converges at cap 3") {
+    // the BFS expands two levels per batch; the cap must bound the
+    // deepest non-empty level, so an odd cap is not one level short
+    val s = spark
+    import s.implicits._
+    val path = Seq("a" -> "b", "b" -> "c", "c" -> "d") // seed a: eccentricity 3
+    val sym = (path ++ path.map(_.swap)).toDF("x", "y")
+    val seeds = Seq(("p", "a")).toDF("comp", "node")
+    def bfs(cap: Int): Map[String, Long] = {
+      spark.conf.set("graft.graph.bfsMaxRounds", cap.toString)
+      try Graph.bfsFrom(spark, seeds, sym).collect()
+        .map(r => r.getString(1) -> r.getLong(2)).toMap
+      finally spark.conf.unset("graft.graph.bfsMaxRounds")
+    }
+    assert(bfs(3) == Map("a" -> 0L, "b" -> 1L, "c" -> 2L, "d" -> 3L))
+    val e = intercept[IllegalStateException](bfs(2))
+    assert(e.getMessage.contains("graft.graph.bfsMaxRounds"), e.getMessage)
+  }
+
   test("g_cc: labeling is a fixpoint — every backbone edge is intra-component") {
     val lbl = Graph.gCc(spark, sf).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap

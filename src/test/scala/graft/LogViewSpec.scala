@@ -12,9 +12,9 @@ import graft.streaming.StoreStream
   * already pins, now extended to batch reads. These tests pin the
   * "iff" in both directions (an unlogged append is INVISIBLE until
   * its catch-up entry heals it; an unlogged delete does not hide
-  * rows), the exact file inventory (via `inputFiles`), the legacy
-  * fallback, and the log-vs-listing equivalence on a store with a
-  * long mutation tail. */
+  * rows), the exact file inventory (via `inputFiles`), the
+  * log-vs-listing equivalence on a store with a long mutation tail,
+  * and a commit that crashed between its pointer swap and its entry. */
 class LogViewSpec extends SparkSpec {
 
   private def freshRoot(tag: String): String = {
@@ -146,17 +146,11 @@ class LogViewSpec extends SparkSpec {
       "log-resolved inventory diverged from the physical data files")
   }
 
-  test("a legacy (pre-manifest) store still reads through the listing fallback") {
-    val path = freshRoot("legacy")
-    val data = Store.fromData(Tables(spark, sf).customer, Seq("c_custkey")).data
-    IndexedStore.writeLegacyForTest(data, path, HashIndex("c_mktsegment", 4))
-    assert(rids(IndexedStore.open(spark, path).find(Nil)) == rids(data))
-  }
-
   test("log-gated and listing reads agree after a long mutation tail (and the gated open never lists data files)") {
     // the §16-3 measuring fixture: many small appends → many part
-    // files and log entries; both read modes must serve the same
-    // state, and the gated mode resolves its inventory from ONE
+    // files and log entries. The gated read must serve exactly the
+    // written rowids — the same state a raw listing of the generation
+    // directory holds — while resolving its inventory from ONE
     // checkpoint + the entries instead of a recursive directory LIST
     // (at object-store scale the listing is the dominating metadata
     // cost; locally we record the wall ratio informationally).
@@ -173,21 +167,57 @@ class LogViewSpec extends SparkSpec {
           .coalesce(1)
         IndexedStore.append(renum, path)
       }
-      def timedCount(logRead: Boolean): (Long, Double) = {
-        spark.conf.set("graft.store.logRead", logRead.toString)
+      val want = rids(data) ++ (n until n + 10L * batches)
+      def timedRids(read: => org.apache.spark.sql.DataFrame): (Seq[Long], Double) = {
         val t = System.nanoTime()
-        val c = IndexedStore.open(spark, path).find(Nil).count()
-        (c, (System.nanoTime() - t) / 1e9)
+        val r = read.select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq
+        (r, (System.nanoTime() - t) / 1e9)
       }
-      try {
-        val (cGated, tGated) = timedCount(logRead = true)
-        val (cListed, tListed) = timedCount(logRead = false)
-        assert(cGated == n + 10L * batches && cGated == cListed,
-          "the two read modes must serve identical state")
-        info(f"open+count with ${batches + 1} mutations: " +
-          f"log-gated $tGated%.2fs vs listing $tListed%.2fs")
-      } finally spark.conf.set("graft.store.logRead", "true")
+      val (gated, tGated) = timedRids(IndexedStore.open(spark, path).find(Nil))
+      val (listed, tListed) = timedRids(
+        spark.read.parquet(s"$path/${IndexedStore.generations(path).last}"))
+      assert(gated.length == want.size && gated.toSet == want,
+        "the gated read must serve exactly the written rowids, once each")
+      assert(listed.sorted == gated.sorted,
+        "the gated read and a raw directory listing must hold the same state")
+      info(f"read with ${batches + 1} mutations: " +
+        f"log-gated open+collect $tGated%.2fs vs raw listing $tListed%.2fs")
     } finally data.unpersist(): Unit
+  }
+
+  test("a commit that crashed between pointer swap and entry stays readable; the next append republishes the entry") {
+    // commitAndSweep writes the checkpoint BEFORE the pointer swap and
+    // the commit entry AFTER it: a crash in between leaves a current
+    // generation without its entry. The reader must serve it from the
+    // checkpoint alone, and the next mutation must publish the missing
+    // entry (once) before its own.
+    val path = freshRoot("swapcrash")
+    val (base, appended0) = StoreStream.mutationHalves(spark, sf)
+    val appended = appended0.cache()
+    try {
+      IndexedStore.write(base, path, HashIndex("c_mktsegment", 4))
+      IndexedStore.delete(spark, path, Seq(Condition.eq("c_mktsegment", "MACHINERY")))
+      IndexedStore.compact(spark, path)
+      val Seq(prev, gen) = IndexedStore.generations(path)
+      assert(new java.io.File(logDir(path), s"$gen.json").delete())
+      val compacted = base.filter(col("c_mktsegment") =!= "MACHINERY")
+        .select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq.sorted
+      def served() = IndexedStore.open(spark, path).find(Nil)
+        .select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq.sorted
+      assert(served() == compacted,
+        "the entry-less generation must serve exactly the compacted rowids")
+      IndexedStore.append(appended, path)
+      val entries = StoreStream.logEntries(spark, path).filter(_.gen == gen)
+      val commits = entries.filter(_.kind == "commit")
+      assert(commits.length == 1 && commits.head.prev.contains(prev),
+        s"the append must republish $gen's commit entry once, prev $prev: $commits")
+      val appRids = appended.select(IndexedStore.RowId).collect().map(_.getLong(0))
+      assert(entries.exists(e => e.kind == "append" &&
+          e.lo.contains(appRids.min) && e.hi.contains(appRids.max)),
+        s"the append must log its own entry after the commit entry: $entries")
+      assert(served() == (compacted ++ appRids).sorted,
+        "a fresh open must see the appended rows through the log")
+    } finally appended.unpersist(): Unit
   }
 
   test("sc_log_read matches an independent recompute of the net state") {

@@ -718,28 +718,6 @@ class StorageSpec extends SparkSpec {
     assert(currentGen(path).getName == "gen-000002")
   }
 
-  test("first manifest commit over a legacy root defers the legacy sweep one commit") {
-    val path = tmp()
-    val store = Store.fromData(Tables(spark, sf).customer, Seq("c_custkey"))
-    // build a LEGACY store: a complete layout at the root, no manifest
-    IndexedStore.writeLegacyForTest(store.data, path, HashIndex("c_mktsegment", 8))
-    assert(!new java.io.File(path, "_graft_manifest.properties").exists)
-    val legacyStats = new java.io.File(path, "_graft_stats.properties")
-    assert(legacyStats.exists, "legacy fixture must have a root sidecar")
-    val legacyHandle = IndexedStore.open(spark, path) // resolves the ROOT
-    val expected = legacyHandle.find(Nil).count()
-    // first manifest commit (compact migrates legacy → generations)
-    IndexedStore.compact(spark, path)
-    assert(legacyStats.exists,
-      "legacy root files must get one commit of grace for open handles")
-    assert(legacyHandle.find(Nil).count() == expected,
-      "open legacy handle broken by the first manifest commit")
-    // the second commit reclaims the legacy files
-    IndexedStore.compact(spark, path)
-    assert(!legacyStats.exists, "legacy root files never reclaimed")
-    assert(IndexedStore.find(spark, path, Nil).count() == expected)
-  }
-
   test("schema-evolved store: gen probes prune files; old rows surface NULLs") {
     import graft.operators.StorageOps
     // first call builds the two-generation store in scratch

@@ -84,11 +84,6 @@ object ProfAppend {
     }
     probes("20 probes (log-gated)")
     probes("20 probes (log-gated, 2nd)")
-    spark.conf.set("graft.store.logRead", "false")
-    t("open (listing)")(IndexedStore.open(spark, idxPath))
-    probes("20 probes (listing)")
-    probes("20 probes (listing, 2nd)")
-    spark.conf.set("graft.store.logRead", "true")
     // isolate planning vs execution on the raw relations
     val genPath2 = genPath
     val fs2 = new java.io.File(new java.net.URI(
