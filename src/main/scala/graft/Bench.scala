@@ -27,20 +27,12 @@ object Bench {
     * through a hash layout vs a full scan (same store shape, layout on
     * a column the probe doesn't use, so index choice falls back to
     * scan — the "no index" arm). */
-  /** Data files read by an EXECUTED frame's scans (AQE-unwrapped).
-    * private[graft]: ZoneMapSpec counts through the same helper. */
-  private[graft] def filesReadOf(df: org.apache.spark.sql.DataFrame): Double = {
-    def unwrap(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        unwrap(a.executedPlan)
-      case other => other +: other.children.flatMap(unwrap)
-    }
-    unwrap(df.queryExecution.executedPlan).collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.metrics("numFiles").value
-    }.sum.toDouble
-  }
+  /** Data files read by an EXECUTED frame's scans, Spark or
+    * driver-local, AQE stages included ([[graft.storage.CkptLocalScan
+    * .filesRead]]). private[graft]: ZoneMapSpec counts through the
+    * same helper. */
+  private[graft] def filesReadOf(df: org.apache.spark.sql.DataFrame): Double =
+    graft.storage.CkptLocalScan.filesRead(df.queryExecution.executedPlan).toDouble
 
   /** Zone-map tier measurement on the sc_zonemap gate store (prebuilt
     * by prepare()): the same one-year Between probe with the tier on
@@ -126,16 +118,32 @@ object Bench {
     val keys = (1 to 20).map(i => i.toLong * (maxKey / 21) + 1)
     // Probe through an open handle, as the reference does: the store is
     // opened once (sidecar + file listing), then serves many gets.
-    def probeAll(path: String): Double = {
+    // Returns the arm's total seconds and its latency distribution: the
+    // per-get p50 and p99 (nearest rank over the keys, so p99 is the
+    // slowest of 20) and the Spark jobs per get a listener counts.
+    def probeAll(path: String): (Double, Map[String, Double]) = {
       val open = IndexedStore.open(spark, path)
-      val t = System.nanoTime()
-      keys.foreach { k =>
-        open.find(Seq(Condition.eq("l_orderkey", k))).collect(): Unit
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet(): Unit
       }
-      (System.nanoTime() - t) / 1e9
+      spark.sparkContext.addSparkListener(listener)
+      val ms = try keys.map { k =>
+        val t = System.nanoTime()
+        open.find(Seq(Condition.eq("l_orderkey", k))).collect(): Unit
+        (System.nanoTime() - t) / 1e6
+      } finally {
+        org.apache.spark.GraftListenerBridge.flushListeners(spark.sparkContext): Unit
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      val sorted = ms.sorted
+      def pct(p: Double): Double = sorted(math.ceil(p * sorted.size).toInt - 1)
+      (ms.sum / 1e3, Map("p50_ms" -> pct(0.50), "p99_ms" -> pct(0.99),
+        "jobs_per_get" -> jobs.get.toDouble / keys.size))
     }
-    val probeIdxSec = probeAll(idxPath)
-    val probeScanSec = probeAll(scanPath)
+    val (probeIdxSec, idxDist) = probeAll(idxPath)
+    val (probeScanSec, scanDist) = probeAll(scanPath)
     // Files touched by one probe — the 1/buckets pruning ratio is the
     // number that scales; wall-clock at this size is floor-bound by
     // per-job scheduling, not IO.
@@ -182,6 +190,8 @@ object Bench {
       "probe_files_read_indexed" -> filesIdx,
       "probe_files_read_scan" -> filesScan,
       "append_rows_per_sec" -> 5.0 * batchRows / appendSec) ++
+      idxDist.map { case (k, v) => s"probe_indexed_$k" -> v } ++
+      scanDist.map { case (k, v) => s"probe_scan_$k" -> v } ++
       zoneOps(spark, sfDir)
   }
 
@@ -534,12 +544,13 @@ object Bench {
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
     val qsCompact = results.map { r => "\"" + r._1 + "\":" + d1(r._2) }
       .mkString("{", ",", "}")
-    // Budget: the capture keeps the last 2000 chars of stdout; the
-    // line reaches it as "[info] " + line + "\n" (sbt prefix) AND sbt
-    // prints a ~75-char "[success] Total time: …" epilogue AFTER it —
-    // which is exactly how all ten round records came back
-    // parsed:null (the epilogue pushed the line's head off the tail).
-    // Budget ≤1800: 2000 − 7 prefix − ~80 epilogue+newlines − margin.
+    // Budget: the capture keeps the last 2000 chars of stdout. The
+    // build's `run / outputStrategy` passes the forked stdout through
+    // bare, but sbt's own "[success] Total time: …" epilogue would
+    // still follow the line (how all ten round records came back
+    // parsed:null), so the build also turns that epilogue off. Budget
+    // ≤1800 keeps the margin for any launcher that prefixes or
+    // appends a line.
     // The sf string is the basename (the full dir is in the rich
     // line) to buy headroom. Guard the fit instead of assuming it:
     // past the budget, a total-only line that parses whole beats a

@@ -41,6 +41,12 @@ import graft.core.{Comparison, Condition, Value}
   * entries, zone-bounded by their append sidecars) are handled
   * driver-side: they are O(mutations since commit), the same order as
   * the log entries any reader already parses.
+  *
+  * While the driver-side tier is live ([[driverTier]]) the planner's
+  * [[CkptLocalScan]] strategy asks this index for a probe's pruned
+  * listing and, when it is small, reads those files on the driver
+  * instead of planning a Spark scan; the listing is the same either
+  * way.
   */
 private[graft] final class CkptFileIndex(
     spark: SparkSession,
@@ -131,6 +137,7 @@ private[graft] final class CkptFileIndex(
     // what a huge inventory can ever ship to the driver, and exactly
     // t+1 rows back means "too big — stay distributed"
     val rows = inv.limit(threshold + 1).collect()
+    collectedRead = true
     if (rows.length > threshold) None
     else Some(rows.map { r =>
       val zones = zAvail.toSeq.sorted.flatMap { c =>
@@ -143,6 +150,15 @@ private[graft] final class CkptFileIndex(
         r.getAs[Long]("__fmtime"), zones)
     })
   }
+
+  @volatile private var collectedRead = false
+
+  /** True once the driver-side tier above has been read and holds the
+    * inventory: every listing is then a driver loop, never a job.
+    * Reading this never triggers the tier's collect — the
+    * [[CkptLocalScan]] planner asks it to decide, for free, whether a
+    * probe's pruned listing can be served on the driver. */
+  private[graft] def driverTier: Boolean = collectedRead && collected.isDefined
 
   /** One checkpointed rel path (schema-sample source for the relation
     * builder) — free when the small-inventory tier is live, one

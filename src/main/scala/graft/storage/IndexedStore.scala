@@ -5,6 +5,7 @@ import java.util.Properties
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persistent, layout-indexed parquet storage — the Spark-native
   * re-expression of the reference's index layer (src/idx.rs).
@@ -1738,11 +1739,16 @@ object IndexedStore {
     * [[CkptFileIndex]]-backed relation: the file inventory never
     * collects past the index's adaptive tier, and bucket/zone
     * predicates reach its listing through Catalyst's own pushdown
-    * (partitionFilters / dataFilters). The tombstone rowids come from
-    * the logged delete entries — read once per handle, on the first
-    * probe that needs them, and filtered out of each probe's scan. */
+    * (partitionFilters / dataFilters). Opening a handle registers the
+    * [[CkptLocalScan]] strategy on the session, so a probe whose
+    * pruned listing is small runs on the driver with no Spark job;
+    * larger listings plan the usual file scan. The tombstone rowids
+    * come from the logged delete entries — read once per handle, on
+    * the driver, on the first probe that needs them, and filtered out
+    * of each probe's scan. */
   final class OpenStore private[IndexedStore] (spark: SparkSession, path: String,
       view: CkptView) {
+    CkptLocalScan.register(spark)
     private val props = loadProps(path)
 
     /** Schema comes from ONE leaf footer (appends share the layout
@@ -1774,30 +1780,34 @@ object IndexedStore {
 
     /** The view's tombstoned rowids, read once per handle on the first
       * probe that needs them — the view is fixed at open, so one read
-      * serves every probe of the snapshot. The explicit schema skips
-      * parquet footer inference; null rowids are dropped (a null never
-      * equals a row's rowid, exactly as under an anti-join). Rowids are
-      * integral, so the collected values are already Catalyst's. */
+      * serves every probe of the snapshot. The files are read on the
+      * driver with the same parquet reader function the local probe
+      * path uses ([[CkptLocalScan.reader]]): no planned query, no job.
+      * Null rowids are dropped (a null never equals a row's rowid,
+      * exactly as under an anti-join). The values are Catalyst's. */
     private lazy val tombstoned: Set[Any] =
       if (view.tombstoneFiles.isEmpty) Set.empty
       else {
-        val schema = org.apache.spark.sql.types.StructType(
-          Seq(base.schema(RowId).copy(nullable = true)))
-        spark.read.schema(schema)
-          .parquet(view.tombstoneFiles.map(f => s"$path/$TombstoneDir/$f"): _*)
-          .collect().flatMap(r => Option(r.get(0))).toSet
+        val field = base.schema(RowId).copy(nullable = true)
+        val schema = StructType(Seq(field))
+        val read = CkptLocalScan.reader(spark, schema, StructType(Nil), schema, Map.empty)
+        view.tombstoneFiles.iterator.flatMap { f =>
+          val (len, mtime) = statDataFile(path, s"$TombstoneDir/$f")
+          read(CkptLocalScan.wholeFile(s"$path/$TombstoneDir/$f", len, mtime))
+            .flatMap(r => if (r.isNullAt(0)) None else Some(r.get(0, field.dataType)))
+        }.toSet
       }
 
-    /** Drop tombstoned rows with an `InSet` filter over the handle's
-      * tombstone set, evaluated in the probe's own scan stage. A null
-      * rowid stays, as it would under an anti-join. */
-    private def antiTs(df: DataFrame): DataFrame =
-      if (tombstoned.isEmpty) df
+    /** Keeps the rows whose rowid the handle's tombstone set does not
+      * hold — an `InSet` evaluated in the probe's own scan; a null
+      * rowid stays, as it would under an anti-join. None when nothing
+      * is tombstoned. */
+    private def live: Option[Column] =
+      if (tombstoned.isEmpty) None
       else {
         import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
         import org.apache.spark.sql.catalyst.expressions.InSet
-        df.filter(col(RowId).isNull ||
-          !column(InSet(expression(col(RowId)), tombstoned)))
+        Some(col(RowId).isNull || !column(InSet(expression(col(RowId)), tombstoned)))
       }
     // Posting frames are resolved AT OPEN (spark.read.parquet lists
     // the posting dir and pins its file index immediately), so the
@@ -1819,20 +1829,24 @@ object IndexedStore {
       postings.getOrElseUpdate(c, spark.read.parquet(postingDir(path, c)))
 
     /** Read rows matching the ANDed conditions through the best index.
-      * The index path yields a superset (bucket-pruned scan); every
-      * condition is always re-applied, exactly like the reference's
-      * post-filter (lib.rs:130-137). The re-filter also reaches the
-      * [[CkptFileIndex]] as data filters, which zone-prune its file
-      * listing. Tombstoned rowids are filtered out by the handle's
-      * tombstone `InSet`. */
+      * The index narrows the read to a superset — a bucket predicate
+      * on the partition column, or a posting semi-join for a secondary
+      * index — and every condition is always re-applied, exactly like
+      * the reference's post-filter (lib.rs:130-137). The frame is ONE
+      * conjunctive filter (bucket predicate ∧ tombstone `InSet` ∧ the
+      * conditions) and one `drop`, so building it analyses two
+      * Datasets. The conditions also reach the [[CkptFileIndex]] as
+      * data filters, which zone-prune its listing; when the pruned
+      * listing is small the probe runs on the driver
+      * ([[CkptLocalScan]]), otherwise as a Spark scan. */
     def find(conds: Seq[graft.core.Condition]): DataFrame = {
     val layout = props.getProperty("layout").split(":", 3)
     val chosen = chooseIndexIn(props, conds)
-    val pruned = chosen match {
+    val (from, bucketPred) = chosen match {
       case Some(c) if c != layout(1) && props.getProperty(s"sec.$c") != null =>
         // Secondary posting probe: one posting bucket → rowid set →
-        // broadcast semi-join against the base (posting lists for one
-        // key are estimate-sized, i.e. small by construction).
+        // semi-join against the base (posting lists for one key are
+        // estimate-sized, i.e. small by construction).
         val n = props.getProperty(s"sec.$c").toInt
         val probeVals = conds.collect {
           case graft.core.Condition(`c`, graft.core.Comparison.Equal(graft.core.Value.Const(v))) => v
@@ -1853,8 +1867,8 @@ object IndexedStore {
             // reads the ACTUAL rowid-set size at runtime — converting
             // to a broadcast semi-join when the key is genuinely small
             // and keeping the shuffled join when it is hot.
-            base.join(rowids, Seq(RowId), "left_semi")
-          case None => base
+            (base.join(rowids, Seq(RowId), "left_semi"), None)
+          case None => (base, None)
         }
       // Curve layouts (2-d z-order / Hilbert, N-dim z-order) share
       // ONE grid walk: every condition over an indexed column bounds
@@ -1877,7 +1891,7 @@ object IndexedStore {
           }
           if (keep) Some(renumber(z)) else None
         }
-        base.filter(col(BucketCol).isin(cells: _*))
+        (base, Some(col(BucketCol).isin(cells: _*)))
       case Some(c) if c == layout(1) =>
         layout(0) match {
           case "hash" =>
@@ -1885,10 +1899,10 @@ object IndexedStore {
             val probes = conds.collect {
               case graft.core.Condition(`c`, graft.core.Comparison.Equal(graft.core.Value.Const(v))) =>
                 // Same type-sensitive-hash discipline as the posting probe.
-                pmod(hash(lit(v).cast(base.schema(c).dataType)), lit(n))
+                col(BucketCol) === pmod(hash(lit(v).cast(base.schema(c).dataType)), lit(n))
             }
             // equality probe → single bucket (constant-folded → pruned)
-            probes.foldLeft(base)((df, b) => df.filter(col(BucketCol) === b))
+            (base, probes.reduceOption(_ && _))
           case "range" =>
             val bounds = if (layout(2).isEmpty) Array.empty[Double]
               else layout(2).split(",").map(_.toDouble)
@@ -1905,28 +1919,27 @@ object IndexedStore {
                 case _ => lit(true)
               }
             }
-            probes.foldLeft(base)((df, p) => df.filter(p))
+            (base, probes.reduceOption(_ && _))
         }
       // No index serves — an equality condition on a bloom column can
       // still prune to the buckets whose filter passes (a superset:
       // bloom false positives only widen the scan, the re-filter below
       // keeps results exact; no false negatives by construction).
       case _ =>
-        conds.collectFirst {
+        val bloomPred = conds.collectFirst {
           case graft.core.Condition(c, graft.core.Comparison.Equal(graft.core.Value.Const(v)))
               if props.getProperty(s"bloom.$c") != null => (c, v)
-        } match {
-          case Some((c, v)) =>
-            bloomBuckets(c, v) match {
-              case Some(buckets) if buckets.isEmpty => base.filter(lit(false))
-              case Some(buckets) => base.filter(col(BucketCol).isin(buckets: _*))
-              case None => base // unrenderable probe value: no pruning
-            }
-          case None => base
+        }.flatMap { case (c, v) =>
+          bloomBuckets(c, v).map { // None: unrenderable probe value, no pruning
+            case buckets if buckets.isEmpty => lit(false)
+            case buckets => col(BucketCol).isin(buckets: _*)
+          }
         }
+        (base, bloomPred)
     }
-    val live = antiTs(pruned)
-    live.filter(graft.core.Condition.all(conds)).drop(BucketCol)
+    val pred = (bucketPred.toSeq ++ live.toSeq :+ graft.core.Condition.all(conds))
+      .reduce(_ && _)
+    from.filter(pred).drop(BucketCol)
     }
 
     /** Buckets whose bloom filter passes for value `v` on column `c`
@@ -1993,8 +2006,7 @@ object IndexedStore {
             .filter(col(BucketCol) === pmod(hash(typed), lit(n)))
             .withColumnRenamed("__key", c)
             .filter(col(c) === typed)
-          antiTs(rows)
-            .filter(graft.core.Condition.all(conds))
+          rows.filter((live.toSeq :+ graft.core.Condition.all(conds)).reduce(_ && _))
             .select(projection.map(col): _*)
         case None =>
           find(conds).select(projection.map(col): _*)

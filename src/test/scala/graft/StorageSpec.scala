@@ -3,11 +3,9 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.core.{Condition, Store, Tables}
-import graft.storage.{HashIndex, HilbertIndex, IndexedStore, RangeIndex, ZOrderIndex, ZOrderNIndex}
+import graft.storage.{CkptLocalScan, HashIndex, HilbertIndex, IndexedStore, RangeIndex, ZOrderIndex, ZOrderNIndex}
 
 /** Layout-index behavior: pruning actually happens, selection follows
   * the estimate heuristic, tombstones and compaction preserve
@@ -19,29 +17,15 @@ class StorageSpec extends SparkSpec {
 
   private def numFilesRead(df: DataFrame): Long = {
     df.collect()
-    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-      case other => other +: other.children.flatMap(unwrap)
-    }
-    unwrap(df.queryExecution.executedPlan).collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
-    }.sum
+    CkptLocalScan.filesRead(df.queryExecution.executedPlan)
   }
 
-  /** Root paths of every file scan in the executed plan. Unlike
-    * [[numFilesRead]]'s unwrap this also descends into materialized
-    * AQE query stages, which are LEAVES of the final plan. */
+  /** Root paths of every file scan in the executed plan, Spark or
+    * driver-local, materialized AQE query stages included. */
   private def scanPaths(df: DataFrame): Seq[String] = {
     df.collect()
-    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        q +: unwrap(q.plan)
-      case other => other +: other.children.flatMap(unwrap)
-    }
-    unwrap(df.queryExecution.executedPlan).collect {
-      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
-    }.flatten
+    CkptLocalScan.scanReads(df.queryExecution.executedPlan)
+      .flatMap(_.relation.location.rootPaths.map(_.toString))
   }
 
   /** The store's current generation dir per its manifest pointer. */
