@@ -262,8 +262,9 @@ object Bench {
     val spark = graft.core.Sessions.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_CONF=k=v[,k=v...] sets session confs before any query
-    // runs — e.g. graft.ngram.prefixOrder=df to bench an alternate plan
-    // without a code edit.
+    // runs — e.g. graft.store.zonemap=false to bench probes without
+    // zone-map pruning, or spark.sql.adaptive.enabled=false, without a
+    // code edit.
     graft.core.Sessions.applyEnvConf(spark)
     // the ICU-off session conf is only result-preserving on an
     // all-ASCII corpus — enforced wherever queries are timed, as Verify

@@ -15,6 +15,20 @@ import org.apache.spark.sql.SparkSession
   */
 object Confs {
 
+  /** Every `graft.*` session conf graft reads — the check
+    * [[Sessions.applyEnvConf]] runs outside input against, so an
+    * override naming a retired or misspelled key fails instead of
+    * being set and never read. ConfsSpec pins this list ≡ the keys the
+    * readers below are called with ≡ README's Session confs table. */
+  val Keys: Seq[String] = Seq(
+    "graft.store.ckptFileIndex.collectThreshold",
+    "graft.store.ckptFileIndex.inputFilesMax",
+    "graft.store.zonemap",
+    "graft.graph.bfsMaxRounds",
+    "graft.cc.maxRounds",
+    "graft.streaming.finalize",
+    "graft.streaming.statePartitions")
+
   /** The conf's value: `default` when unset, else one of `default`
     * or `allowed` (the default is implicitly allowed — call sites
     * don't repeat it). */

@@ -44,10 +44,16 @@ object Sessions {
   /** Apply SPARK_GRAFT_CONF=k=v[,k=v...] session overrides — the shared
     * bench/dev-loop contract (a silently dropped override would
     * attribute a run to a plan that never executed, so malformed
-    * entries throw). */
-  def applyEnvConf(spark: SparkSession): Unit =
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
+    * entries and `graft.*` keys outside [[Confs.Keys]] throw). `raw`
+    * is the variable's value; specs pass it directly. */
+  def applyEnvConf(spark: SparkSession,
+      raw: Option[String] = sys.env.get("SPARK_GRAFT_CONF")): Unit =
+    raw.foreach(_.split(",").foreach { kv =>
       kv.split("=", 2) match {
+        case Array(k, _) if k.trim.startsWith("graft.") &&
+            !Confs.Keys.contains(k.trim) =>
+          sys.error(s"SPARK_GRAFT_CONF key '${k.trim}' is not a graft conf " +
+            s"(known: ${Confs.Keys.mkString(", ")})")
         case Array(k, v) if k.trim.nonEmpty =>
           System.err.println(s"[conf] ${k.trim}=${v.trim}")
           spark.conf.set(k.trim, v.trim)

@@ -102,14 +102,10 @@ object Tables {
   }
 
   /** Numbered hash repartition pinning a fan-out stage's width against
-    * AQE's byte-blind coalescing (REPARTITION_BY_NUM is exempt) — the
-    * r10 fix for candidate/score tails whose tiny id exchange EXPLODES
-    * through the downstream join. `graft.fanout.pin=false` turns every
-    * pin into a no-op: a measurement escape hatch (the A/B behind the
-    * committed at-scale evidence — the result is identical either way;
-    * only the plan changes), never a correctness knob. */
+    * AQE's byte-blind coalescing (REPARTITION_BY_NUM is exempt) — for
+    * candidate/score tails whose tiny id exchange EXPLODES through the
+    * downstream join. */
   def pinWidth(df: DataFrame, keys: org.apache.spark.sql.Column*): DataFrame =
-    if (!Confs.boolConf(df.sparkSession, "graft.fanout.pin", default = true)) df
-    else df.repartition(
+    df.repartition(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, keys: _*)
 }

@@ -27,10 +27,7 @@ import graft.functions.Parity.stableRound
   * reduction ([[Dim]] rows) and one pair-keyed Hessian reduction
   * ([[Dim]]² rows via the per-doc nnz×nnz feature self-join — one
   * shuffle), then a D×D driver solve. Feature rows are computed once
-  * and localCheckpointed. At full scale the Hessian pass runs over a
-  * fixed SAMPLE (sampled Newton — the PQ/Gram train-on-sample
-  * discipline) or drops to L-BFGS on the exact gradients, and scoring
-  * stays a single narrow pass; both change constants, not the shape.
+  * and localCheckpointed; scoring stays a single narrow pass.
   *
   * Determinism without sacrificing distribution: float sums over
   * shuffled rows commute only approximately, so (a) per-doc margins
@@ -80,69 +77,27 @@ object Classify {
   /** Learned model + per-iteration loss trace (the ridge-regularized
     * mean log-loss — the trained objective; see [[lossOf]]). `steps`
     * records each epoch's accepted line-search step (0.0 = rejected,
-    * model unmoved) — the telemetry a Wolfe-search decision needs
-    * (see the SURVEY §16 measurement: the two-loop direction accepts
-    * step 1 essentially always, so a stricter accept rule has nothing
-    * to improve on this objective). No intercept:
+    * model unmoved). No intercept:
     * Σ_b x_b = 1 per doc puts the all-ones direction in the feature
     * span, so a bias would be exactly collinear (see [[Ridge]]). */
   final case class Model(weights: Array[Double], losses: Seq[Double],
       steps: Seq[Double])
 
   /** Feature rows (doc_id, bucket, x, y): length-normalized hashed
-    * term frequency x = c_bucket / n_words, label y ∈ {0,1}.
-    * `graft.classify.features=bigram` adds hashed word-BIGRAM grams to
-    * the same bucket space (x then normalizes by the doc's total gram
-    * count) — the signal unigram marginals cannot carry (word ORDER);
-    * ZipfBigramSpec measures the separation gap on a fixture whose
-    * classes are unigram-identical. Default stays unigram. */
+    * term frequency x = c_bucket / n_words, label y ∈ {0,1}. */
   def features(spark: SparkSession, dir: String): DataFrame = {
     val labels = TextAnalysis.qualityMetrics(spark, dir)
       .select(col("doc_id"), col("n_words"),
         (col("quality") >= Tau).cast("int").as("y"))
-    featuresOf(TextAnalysis.docsSpread(spark, dir), labels,
-      graft.core.Confs.enumConf(spark, "graft.classify.features",
-        "unigram", "bigram"))
-  }
-
-  /** The extraction pipeline over any (doc_id, text) docs frame and
-    * (doc_id, [n_words,] y) label frame — package-visible so the
-    * bigram-separation spec can inject its own labels. */
-  private[graft] def featuresOf(docs: DataFrame, labels: DataFrame,
-      mode: String): DataFrame = {
-    val w = graft.functions.TextFunctions.words(col("text"))
-    val grams = mode match {
-      case "unigram" => explode(w)
-      case "bigram" =>
-        // unigrams ++ joined adjacent pairs; slice needs a guard — a
-        // sub-2-word doc has no bigrams and a negative slice length
-        // throws rather than yielding empty
-        val bi = when(size(w) >= 2,
-          zip_with(slice(w, lit(1), size(w) - 1), slice(w, lit(2), size(w) - 1),
-            (a, b) => concat_ws("_", a, b)))
-          .otherwise(array().cast("array<string>"))
-        explode(concat(w, bi))
-      case other => throw new IllegalArgumentException(
-        s"graft.classify.features = '$other' (expected 'unigram' or 'bigram')")
-    }
-    val counts = docs
-      .select(col("doc_id"), grams.as("word"))
+    TextAnalysis.docsSpread(spark, dir)
+      .select(col("doc_id"),
+        explode(graft.functions.TextFunctions.words(col("text"))).as("word"))
       .filter(length(col("word")) > 0)
       .select(col("doc_id"), pmod(xxhash64(col("word")), lit(Dim)).as("bucket"))
       .groupBy("doc_id", "bucket").agg(count(lit(1)).as("c"))
-    if (mode == "unigram")
-      // historical contract: normalize by the word count (what the
-      // rows-only gate and every recorded model were trained on)
-      counts.join(labels, "doc_id")
-        .select(col("doc_id"), col("bucket"),
-          (col("c") / col("n_words")).as("x"), col("y"))
-    else {
-      val totals = counts.groupBy("doc_id").agg(sum(col("c")).as("n_grams"))
-      counts.join(totals, "doc_id")
-        .join(labels.select("doc_id", "y"), "doc_id")
-        .select(col("doc_id"), col("bucket"),
-          (col("c") / col("n_grams")).as("x"), col("y"))
-    }
+      .join(labels, "doc_id")
+      .select(col("doc_id"), col("bucket"),
+        (col("c") / col("n_words")).as("x"), col("y"))
   }
 
   /** Scored frame (doc_id, y, p) for a given model: sorted-fold
@@ -203,55 +158,6 @@ object Classify {
     x
   }
 
-  /** Every SampledNewtonMod-th doc (md5-selected) carries the Hessian
-    * in sampled mode — deterministic, content-independent. */
-  val SampledNewtonMod = 4
-
-  /** L-BFGS memory: correction pairs kept for the two-loop recursion. */
-  val LbfgsMem = 5
-
-  /** L-BFGS iteration budget: a first-order method buys its cheap
-    * iterations (no Dim²-keyed curvature pass) with more of them —
-    * the standard trade (measured on the gate corpus: 16 L-BFGS
-    * iterations reach the exact-Newton 6-iteration loss
-    * neighborhood; see ClassifySpec). */
-  val LbfgsEpochs = 16
-
-  /** The L-BFGS two-loop recursion (Nocedal & Wright, Algorithm 7.4):
-    * approximate H⁻¹·g from the last [[LbfgsMem]] (s, y) correction
-    * pairs — `hist` oldest-first — with the standard γ = sᵀy/yᵀy
-    * initial scaling. Driver-side O(mem·Dim) doubles on deterministic
-    * inputs, so the direction is bit-deterministic like everything
-    * else in the trainer. Empty history falls back to the raw
-    * gradient (first step = steepest descent under the line search). */
-  private def twoLoop(g: Array[Double],
-      hist: Seq[(Array[Double], Array[Double])]): Array[Double] = {
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    if (hist.isEmpty) return g.clone()
-    val q = g.clone()
-    val alphas = new Array[Double](hist.length)
-    for (i <- hist.indices.reverse) {
-      val (s, y) = hist(i)
-      val a = dot(s, q) / dot(y, s)
-      alphas(i) = a
-      var k = 0; while (k < q.length) { q(k) -= a * y(k); k += 1 }
-    }
-    val (sL, yL) = hist.last
-    val gamma = dot(sL, yL) / dot(yL, yL)
-    var k = 0; while (k < q.length) { q(k) *= gamma; k += 1 }
-    for (i <- hist.indices) {
-      val (s, y) = hist(i)
-      val beta = dot(y, q) / dot(y, s)
-      val corr = alphas(i) - beta
-      var j = 0; while (j < q.length) { q(j) += corr * s(j); j += 1 }
-    }
-    q
-  }
-
   /** Train the logistic model by distributed Newton / IRLS. `feats`
     * must carry (doc_id, bucket, x, y) and be cheap to rescan (the
     * caller checkpoints). Each iteration: one scored pass, then the
@@ -259,29 +165,7 @@ object Classify {
     * Hessian (Dim² keys — the per-doc nnz×nnz feature pair explode,
     * one shuffle), a driver-side D×D solve, and a backtracking halve
     * of the Newton step if the measured loss rises — accepted loss is
-    * monotone nonincreasing by construction.
-    *
-    * `graft.classify.hessian=sampled` estimates the curvature from a
-    * deterministic md5-selected 1/[[SampledNewtonMod]] doc subset
-    * (sampled Newton — Roosta-Khorasani & Mahoney 2016): the nnz²
-    * pair explode, the one superlinear term, shrinks by the sampling
-    * factor while the GRADIENT and the line-search loss stay exact
-    * over the full corpus — so every accepted step still descends the
-    * true objective and the monotone-loss invariant is untouched; an
-    * approximate direction costs extra iterations at worst, never
-    * correctness. Still bit-deterministic (the sample is a pure
-    * doc_id hash; reductions stay integer-quantized).
-    *
-    * `graft.classify.hessian=lbfgs` drops the curvature pass
-    * entirely: the direction comes from the [[twoLoop]] recursion
-    * over the last [[LbfgsMem]] (s, y) pairs of the EXACT quantized
-    * gradients — no Dim²-keyed shuffle at all, [[LbfgsEpochs]]
-    * cheaper iterations instead (each = one gradient reduction + the
-    * line-search scoring passes). Same monotone-loss and
-    * bit-determinism guarantees; the 100 TB pick when even a sampled
-    * nnz² pair explode is too wide (long documents). Default stays
-    * exact — the gate-scale corpus doesn't need the estimate, and the
-    * recorded model/spec pins ride the exact path. */
+    * monotone nonincreasing by construction. */
   def train(spark: SparkSession, feats: DataFrame, nDocs: Long): Model = {
     import spark.implicits._
     var w = Array.fill(Dim)(0.0)
@@ -293,31 +177,14 @@ object Classify {
     var loss = lossOf(spark, scored, nDocs, w)
     val losses = Seq.newBuilder[Double]
     val steps = Seq.newBuilder[Double]
-    val mode = graft.core.Confs.enumConf(spark, "graft.classify.hessian",
-      "exact", "sampled", "lbfgs")
-    val (hFeats, nHess) = mode match {
-      case "sampled" =>
-        val fh = feats.filter(pmod(graft.functions.TextFunctions.md5_32(
-          col("doc_id").cast("string")), lit(SampledNewtonMod)) === 0)
-          .localCheckpoint(false)
-        val n = fh.select("doc_id").distinct().count()
-        require(n > 0, "sampled-Newton subset is empty — corpus too small")
-        (fh, n)
-      case _ => (feats, nDocs)
-    }
-    val fa = hFeats.select(col("doc_id"), col("bucket").as("ba"), col("x").as("xa"),
+    val fa = feats.select(col("doc_id"), col("bucket").as("ba"), col("x").as("xa"),
       col("y"))
-    val fb = hFeats.select(col("doc_id"), col("bucket").as("bb"), col("x").as("xb"))
-    // Exact mode: the nnz² feature-pair frame is EPOCH-INVARIANT (only
-    // the scored frame changes) and its diagonal (ba = bb) carries
-    // each (doc, bucket, x) row exactly once, so the gradient rides
-    // the same pass as the Hessian — one keyed aggregation and ONE
-    // driver collect per epoch instead of two joins + two collects.
-    // The quantized per-row terms are spelled with the identical op
-    // order as the two-pass form, so the collected integer sums — and
-    // therefore the trained model — are bit-identical. Sampled mode
-    // keeps the two-pass shape (its Hessian subset differs from the
-    // gradient's full corpus).
+    val fb = feats.select(col("doc_id"), col("bucket").as("bb"), col("x").as("xb"))
+    // The nnz² feature-pair frame is EPOCH-INVARIANT (only the scored
+    // frame changes) and its diagonal (ba = bb) carries each (doc,
+    // bucket, x) row exactly once, so the gradient rides the same pass
+    // as the Hessian — one keyed aggregation and ONE driver collect
+    // per epoch instead of two joins + two collects.
     //
     // Deliberately NOT checkpointed: the frame is REBUILT from the
     // checkpointed feats every epoch. Persisting it was measured 1.4×
@@ -327,84 +194,32 @@ object Classify {
     // costs more than re-running the cheap 150k-row self-join the
     // blocks replace — recompute-vs-cache favors recompute exactly as
     // §5 of the optimization guide warns.
-    val pairsExact =
-      if (mode == "exact")
-        fa.join(fb, "doc_id")
-          .select(col("doc_id"), col("ba"), col("bb"), col("xa"), col("xb"),
-            col("y"))
-      else null
-    // L-BFGS state: correction pairs (oldest-first) and the previous
-    // accepted point/gradient — driver-side, LbfgsMem·Dim doubles
-    var hist = Vector.empty[(Array[Double], Array[Double])]
-    var prevW: Array[Double] = null
-    var prevG: Array[Double] = null
-    val nEpochs = if (mode == "lbfgs") LbfgsEpochs else Epochs
-    for (_ <- 1 to nEpochs) {
-      // exact mode: one combined (gradient ⊕ Hessian) pass — gq is
-      // summed over the diagonal rows only, where xa IS the (doc,
-      // bucket) row's x and the term matches the standalone gradient's
-      // floor((p − y)·x·Q + ½) bit for bit
-      val combined: Map[(Long, Long), (Long, Long)] =
-        if (mode == "exact")
-          pairsExact
-            .join(scored.select(col("doc_id"), col("p")), "doc_id")
-            .select(col("ba"), col("bb"),
-              floor((col("p") * (lit(1.0) - col("p"))) * col("xa") * col("xb") * Q + 0.5)
-                .cast("long").as("hq"),
-              when(col("ba") === col("bb"),
-                floor((col("p") - col("y")) * col("xa") * Q + 0.5).cast("long"))
-                .as("gq"))
-            .groupBy("ba", "bb")
-            .agg(sum(col("hq")).as("h"), sum(col("gq")).as("g"))
-            .as[(Long, Long, Long, Option[Long])].collect()
-            .map { case (i, j, h, gq) => (i, j) -> (h, gq.getOrElse(0L)) }.toMap
-        else null
-      val gradQ: Map[Long, Long] =
-        if (mode == "exact")
-          combined.collect { case ((i, j), (_, gq)) if i == j => i -> gq }
-        else
-          feats.join(scored.select(col("doc_id"), col("p")), "doc_id")
-            .select(col("bucket"),
-              floor((col("p") - col("y")) * col("x") * Q + 0.5)
-                .cast("long").as("gq"))
-            .groupBy("bucket").agg(sum(col("gq")).as("g"))
-            .as[(Long, Long)].collect().toMap
+    val pairs = fa.join(fb, "doc_id")
+      .select(col("doc_id"), col("ba"), col("bb"), col("xa"), col("xb"),
+        col("y"))
+    for (_ <- 1 to Epochs) {
+      // one combined (gradient ⊕ Hessian) pass — gq is summed over the
+      // diagonal rows only, where xa IS the (doc, bucket) row's x, so
+      // the term is the gradient's floor((p − y)·x·Q + ½) bit for bit
+      val combined: Map[(Long, Long), (Long, Long)] = pairs
+        .join(scored.select(col("doc_id"), col("p")), "doc_id")
+        .select(col("ba"), col("bb"),
+          floor((col("p") * (lit(1.0) - col("p"))) * col("xa") * col("xb") * Q + 0.5)
+            .cast("long").as("hq"),
+          when(col("ba") === col("bb"),
+            floor((col("p") - col("y")) * col("xa") * Q + 0.5).cast("long"))
+            .as("gq"))
+        .groupBy("ba", "bb")
+        .agg(sum(col("hq")).as("h"), sum(col("gq")).as("g"))
+        .as[(Long, Long, Long, Option[Long])].collect()
+        .map { case (i, j, h, gq) => (i, j) -> (h, gq.getOrElse(0L)) }.toMap
       val g = Array.tabulate(Dim)(b =>
-        gradQ.getOrElse(b.toLong, 0L) / Q / nDocs + Ridge * w(b))
-      val delta = if (mode == "lbfgs") {
-        // push the (s, y) pair of the PREVIOUS accepted step (the
-        // gradient just computed is this epoch's g_{k+1}); the
-        // curvature guard sᵀy > 0 keeps the implicit H₀ positive —
-        // a rejected step moves nothing and contributes no pair
-        if (prevW != null) {
-          val s = Array.tabulate(Dim)(b => w(b) - prevW(b))
-          val y = Array.tabulate(Dim)(b => g(b) - prevG(b))
-          val sy = s.iterator.zip(y.iterator).map { case (a, c) => a * c }.sum
-          if (sy > 1e-12) hist = (hist :+ (s, y)).takeRight(LbfgsMem)
-        }
-        prevW = w; prevG = g
-        twoLoop(g, hist)
-      } else {
-        // the Dim²-keyed curvature pass — the one superlinear term,
-        // absent entirely in lbfgs mode. Exact mode already collected
-        // it in the combined pass above; sampled mode runs its own
-        // subset join (the Hessian subset ≠ the gradient's full corpus).
-        val hessQ: Map[(Long, Long), Long] =
-          if (mode == "exact") combined.map { case (k, (h, _)) => k -> h }
-          else fa.join(fb, "doc_id")
-            .join(scored.select(col("doc_id"),
-              (col("p") * (lit(1.0) - col("p"))).as("s")), "doc_id")
-            .select(col("ba"), col("bb"),
-              floor(col("s") * col("xa") * col("xb") * Q + 0.5)
-                .cast("long").as("hq"))
-            .groupBy("ba", "bb").agg(sum(col("hq")).as("h"))
-            .as[(Long, Long, Long)].collect()
-            .map { case (i, j, v) => (i, j) -> v }.toMap
-        val h = Array.tabulate(Dim, Dim)((i, j) =>
-          hessQ.getOrElse((i.toLong, j.toLong), 0L) / Q / nHess +
-            (if (i == j) Ridge else 0.0))
-        solve(h, g)
-      }
+        combined.get((b.toLong, b.toLong)).fold(0L)(_._2) / Q / nDocs +
+          Ridge * w(b))
+      val h = Array.tabulate(Dim, Dim)((i, j) =>
+        combined.get((i.toLong, j.toLong)).fold(0L)(_._1) / Q / nDocs +
+          (if (i == j) Ridge else 0.0))
+      val delta = solve(h, g)
       // backtracking: halve the Newton step until the loss stops
       // rising; if no halving helps, REJECT the step and keep the
       // current point — the monotone-loss invariant holds "by

@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * O(log² n) rounds on ANY diameter, and every aggregation is a
   * map-side-combined `groupBy().min()` — no per-node neighborhood
   * ever collects into one row, so a power-law hub costs the same as
-  * a leaf. Used directly by [[Graph.gCc]] and behind
-  * `graft.cluster.ccMode=star` by [[Dedup.clusterLabels]];
+  * a leaf. Used by [[Graph.gCc]] and the backbone labeling;
   * [[graft.GraphSpec]] pins star ≡ union-find and the round bound on
   * a 255-node chain (propagation's worst case).
   */
@@ -143,10 +142,9 @@ object Components {
     }
     // Fixpoint pairs are stars (root, child); defensive grouped min
     // keeps the labeling single-valued even mid-refactor. The result
-    // is CHECKPOINTED: callers reference it repeatedly (Dedup's label
-    // memo serves every curation consumer; dClusterIncr joins it four
-    // times) and must get stored blocks, not a recompute recipe —
-    // the propagate() contract.
+    // is CHECKPOINTED: callers join it back onto their node sets and
+    // must get stored blocks, not a recompute recipe — the
+    // propagate() contract.
     val roots = pairs.groupBy(col("b").as("node"))
       .agg(min(col("a")).as("root"))
     val lbl = nodes.join(roots, Seq("node"), "left")

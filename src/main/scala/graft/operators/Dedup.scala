@@ -93,26 +93,13 @@ object Dedup {
     * with exact set Jaccard |∩|/(|A|+|B|−|∩|) ≥ τ then drops false
     * candidates.
     *
-    * The theorem holds for ANY global total order. The DEFAULT order
-    * is the hash value itself, so each doc's prefix is
+    * The theorem holds for ANY global total order; the order used is
+    * the hash value itself, so each doc's prefix is
     * `slice(array_sort(hs), 1, ℓ)` — a narrow per-row expression
     * costing NO df pass, no join, no window. Random-order prefixes
-    * still cut candidate volume to ~(1−τ)² of the full index's Σ df².
-    * The textbook df-ascending canonical order (rarest tokens first,
-    * so prefixes concentrate on rare tokens and collide less) is
-    * available under `spark.conf graft.ngram.prefixOrder = "df"`: it
-    * pays one posting-df aggregation plus a per-doc rank window to
-    * buy fewer candidates. Measured at sf0.1 on THIS corpus (uniform
-    * tiny vocabulary, dfs cluster tightly) the df pass costs ~20%
-    * more than it saves; on a Zipfian corpus ZipfNgramSpec measures
-    * 151× fewer candidates (173 vs 26,181 on a vocab-3000 s=1.07
-    * fixture; at 750 docs the df pass's fixed cost still makes hash
-    * the faster wall clock) and the crossover is decisive by 20k
-    * docs: 45.5s hash vs 9.7s df on 1211× fewer candidates
-    * (GRAFT_ZIPF_DOCS=16000 run, SURVEY §8) — candidate volume grows
-    * ~Σdf² with the corpus while the df pass stays linear. Both
-    * orders are result-identical (spec-asserted pair-set invariance)
-    * — the flag picks a plan, never an answer.
+    * still cut candidate volume to ~(1−τ)² of the full index's Σ df²
+    * (ZipfNgramSpec pins the cut against the full index, and the pair
+    * set against an all-pairs Jaccard, on a Zipfian fixture).
     *
     * The whole pipeline runs on 32-bit md5 shingle hashes, not shingle
     * strings: postings shuffle 8-byte longs instead of ~25-byte
@@ -130,8 +117,10 @@ object Dedup {
     * tried and cost ~40% wall-clock at sf0.1). */
   /** Hash-order result-preserving prefix postings shared by the ngram
     * dedup family: ℓ = |s| − ⌈τ·|s|⌉ + 1 with ⌈τ·sz⌉ = (3·sz+9) div 10
-    * in exact integer arithmetic (τ = 3/10 = JaccardTau). */
-  private def hashPrefix(sets: DataFrame): DataFrame =
+    * in exact integer arithmetic (τ = 3/10 = JaccardTau).
+    * Package-visible so specs can measure candidate volume on
+    * controlled fixtures. */
+  private[graft] def hashPrefix(sets: DataFrame): DataFrame =
     sets.select(col("doc_id"), explode(expr(
       "slice(array_sort(hs), 1, size(hs) - ((3 * size(hs) + 9) div 10) + 1)")).as("h"))
 
@@ -167,17 +156,9 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(transform(col("shing"), s => md5_32(s))).as("hs"))
 
-  def dDedupNgram(spark: SparkSession, dir: String): DataFrame =
-    ngramPairsOf(spark, ngramSets(spark, dir))
-
-  /** The full AllPairs pipeline (prefix candidates → exact verify) on
-    * an arbitrary hashed-set frame — [[dDedupNgram]] parameterized by
-    * its input so [[lshTuneTruth]]'s doc-sample gate can run the SAME
-    * pipeline on a gated subset. */
-  private[graft] def ngramPairsOf(spark: SparkSession, sets: DataFrame): DataFrame = {
-    // one prefix frame referenced on BOTH join sides — the df order's
-    // localCheckpoint barrier then materializes its aggregation once
-    val prefix = ngramPrefix(spark, sets)
+  def dDedupNgram(spark: SparkSession, dir: String): DataFrame = {
+    val sets = ngramSets(spark, dir)
+    val prefix = hashPrefix(sets)
     // The candidate id-pairs are narrow (16 B) so AQE coalesces their
     // dedup exchange by BYTE size to a handful of tasks — but the stage
     // DOWNSTREAM of that exchange does the expensive part (both shingle
@@ -213,43 +194,6 @@ object Dedup {
       dDedupNgram(spark, dir).write.mode("overwrite").parquet(path)
     }
     spark.read.parquet(path)
-  }
-
-  /** Conf-selected prefix postings for the candidate self-join —
-    * package-visible so specs can measure candidate volume per order
-    * on controlled fixtures (the hash-vs-df trade is corpus-shaped;
-    * see the [[dDedupNgram]] scaladoc).
-    * Prefix length ℓ = |s| − ⌈τ·|s|⌉ + 1, with ⌈τ·sz⌉ = (3·sz+9) div 10
-    * in exact integer arithmetic (τ = 3/10 = JaccardTau). */
-  private[graft] def ngramPrefix(spark: SparkSession, sets: DataFrame): DataFrame = {
-    val prefix = graft.core.Confs.enumConf(spark,
-        "graft.ngram.prefixOrder", "hash", "df") match {
-      case "df" =>
-        // df-ascending canonical order: rank every posting by (df, h)
-        // and keep each doc's ℓ rarest tokens. One df aggregation +
-        // one per-doc rank window more than the hash order; prefixes
-        // concentrate on rare tokens, so prefix⋈prefix candidate
-        // volume shrinks on skewed (Zipfian) vocabularies.
-        val posts = sets.select(col("doc_id"), size(col("hs")).as("sz"),
-          explode(col("hs")).as("h"))
-        val dfs = posts.groupBy("h").agg(count(lit(1)).as("df"))
-        posts.join(dfs, "h")
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("doc_id").orderBy(col("df"), col("h"))))
-          .filter(col("rn") <= col("sz") - expr("(3 * sz + 9) div 10") + 1)
-          .select(col("doc_id"), col("h"))
-          // Materialization barrier: both sides of the candidate
-          // self-join reference this frame — without it the df
-          // aggregation + rank window run twice. Lazy localCheckpoint,
-          // not cache: the blocks are released by the ContextCleaner
-          // when the frame is GC'd, so repeated invocations don't pin
-          // storage for the application lifetime. (doc_id, h) pairs
-          // only, ~ℓ per doc, so the materialization is small.
-          .localCheckpoint(false)
-      case _ => hashPrefix(sets)
-    }
-    prefix
   }
 
   /** The one DuckDB formulation of shingle → candidate → exact-verify
@@ -310,7 +254,7 @@ object Dedup {
       s"slice(array_sort(hs), 1, size(hs) - (($ContainTauNum * size(hs) + 9) div 10) + 1)")).as("h"))
     val posts = sets.select(col("doc_id"), explode(col("hs")).as("h"))
     // pin the exact-verify width against AQE's byte-blind coalesce of
-    // the narrow pair exchange — the [[ngramPairsOf]] rationale
+    // the narrow pair exchange — the [[dDedupNgram]] rationale
     val cand = graft.core.Tables.pinWidth(
         prefixIn.as("a").join(posts.as("b"), "h")
           .filter(col("a.doc_id") =!= col("b.doc_id"))
@@ -596,55 +540,28 @@ object Dedup {
     * powers are computed by binary exponentiation with the identical
     * op tree in both engines (never pow()).
     *
-    * Scale: two conf knobs make the 100 TB shape CODE, not prose —
-    *  - `graft.dedup.lshTuneFold` (the [[graft.operators.TextAnalysis]]
-    *    jsdFold pattern): `parity` (default) folds each config's mean
-    *    over ONE sorted per-pair row — bit-identical to the oracle,
-    *    fine while the τ-true pair set fits a row (gate scale);
-    *    `free` is a plain map-side-combined sum — constant row size
-    *    at ANY pair volume, last-bit nondeterministic, pinned ≡
-    *    parity to 1e-9 in PipelineSpec and collect_list-free in
-    *    PlanQualitySpec.
-    *  - `graft.dedup.lshTuneSample` = N (≥1, default 1): keep only
-    *    docs with md5("lshs:"+doc_id) mod N = 0 BEFORE the truth
-    *    pipeline, shrinking candidate volume ~1/N² — the
-    *    d_dedup_eval train-on-sample discipline, but enforced in the
-    *    plan; per-pair collision probability is a pair property, so
-    *    the sampled mean is unbiased on retained pairs (PipelineSpec
-    *    pins sampled truth ≡ full truth restricted to gated docs).
-    * The full-corpus truth is the scratch-persisted [[ngramTruth]]
-    * artifact shared with [[dDedupEval]]; a sampled run computes its
-    * own (smaller) pipeline live. */
+    * Each config's mean folds over ONE sorted per-pair row —
+    * bit-identical to the oracle, with row size bounded by the τ-true
+    * pair set. The truth is the scratch-persisted [[ngramTruth]]
+    * artifact shared with [[dDedupEval]]. */
   def dLshTune(spark: SparkSession, dir: String): DataFrame = {
-    val free = graft.core.Confs.enumConf(spark,
-      "graft.dedup.lshTuneFold", "parity", "free") == "free"
-    val sampleN = graft.core.Confs.intConf(spark, "graft.dedup.lshTuneSample", 1)
-    val truthAll =
-      if (sampleN == 1) ngramTruth(spark, dir)
-      else ngramPairsOf(spark, ngramSets(spark, dir).filter(
-        pmod(conv(substring(md5(concat(lit("lshs:"), col("doc_id").cast("string"))),
-          1, 8), 16, 10).cast("long"), lit(sampleN.toLong)) === 0))
     // five config arms reference the frame — freeze it once (lazy
     // localCheckpoint: blocks released when the frame is dropped)
-    val truth = truthAll.select(col("id1"), col("id2"), col("jaccard"))
+    val truth = ngramTruth(spark, dir)
+      .select(col("id1"), col("id2"), col("jaccard"))
       .localCheckpoint(false)
     LshTuneConfigs.map { case (b, r) =>
       val prob = lit(1.0) - powCol(lit(1.0) - powCol(col("jaccard"), r), b)
-      val folded =
-        if (free)
-          truth.agg(sum(prob).as("ps"), count(lit(1)).as("n"))
-            .select(col("n"), (col("ps") / col("n").cast("double")).as("mean"))
-        else
-          truth.select(struct(col("id1"), col("id2"), prob.as("p")).as("s"))
-            .agg(sort_array(collect_list(col("s"))).as("ps"),
-              count(lit(1)).as("n"))
-            .select(col("n"),
-              (graft.functions.expr.FoldExpressions.sumArrayField(col("ps"), "p") /
-                col("n").cast("double")).as("mean"))
-      folded.select(lit(b).as("bands"), lit(r).as("rows_per_band"),
-        lit(b == Bands).as("is_current"),
-        col("n").as("n_truth"),
-        stableRound(col("mean"), 6).as("exp_recall"))
+      truth.select(struct(col("id1"), col("id2"), prob.as("p")).as("s"))
+        .agg(sort_array(collect_list(col("s"))).as("ps"),
+          count(lit(1)).as("n"))
+        .select(col("n"),
+          (graft.functions.expr.FoldExpressions.sumArrayField(col("ps"), "p") /
+            col("n").cast("double")).as("mean"))
+        .select(lit(b).as("bands"), lit(r).as("rows_per_band"),
+          lit(b == Bands).as("is_current"),
+          col("n").as("n_truth"),
+          stableRound(col("mean"), 6).as("exp_recall"))
     }.reduce(_.unionByName(_)).orderBy("bands")
   }
 
@@ -877,50 +794,17 @@ object Dedup {
     * Spark's ContextCleaner once the dropped frames are GC'd. */
   private[graft] def clearLabelCache(): Unit = labelCache.clear()
 
-  /** CC algorithm for [[clusterLabels]], conf `graft.cluster.ccMode`
-    * — both produce the identical min-of-component labeling (integer
-    * ids, no float hazard), so BOTH are hash-green; the choice is a
-    * round-complexity bet on component SHAPE:
-    *
-    *  - `minlabel` (default): [[propagate]] — one hop per
-    *    materialized round, right for the shallow star/clique
-    *    components dup graphs overwhelmingly produce (2-3 rounds);
-    *  - `star`: [[Components.starLabels]] — O(log²) rounds on ANY
-    *    diameter, the safe mode when near-dup chains are long
-    *    (A≈B≈C≈… content drift, mirror rings); GraphSpec pins it ≡
-    *    union-find, and measures 9 rounds on a 255-chain (spec bound
-    *    ≤ 10) where propagation would need ~128 two-hop rounds. */
-  private def ccStar(spark: SparkSession): Boolean =
-    graft.core.Confs.enumConf(spark, "graft.cluster.ccMode",
-      "minlabel", "star") == "star"
-
   /** Unordered cluster labels (composable form — [[Curation]] anti-
     * joins on the non-keepers without paying a presentation sort). */
   def clusterLabels(spark: SparkSession, dir: String): DataFrame = {
-    val star = ccStar(spark)
-    // mode in the memo key: a conf flip mid-session must recompute,
-    // not serve the other algorithm's (identical, but differently
-    // checkpointed) frame
-    val key = spark.sparkContext.applicationId + (if (star) "/star" else "")
+    val key = spark.sparkContext.applicationId
     if (labelCache.contains((key, dir))) graft.core.CacheStats.hit()
     labelCache.getOrElseUpdate((key, dir), {
-      cc(spark, dDedupMinhash(spark, dir).select("id1", "id2"))
+      propagate(dDedupMinhash(spark, dir).select("id1", "id2"))
         .withColumn("is_keeper", col("doc_id") === col("cluster_id"))
         .select("doc_id", "cluster_id", "is_keeper")
     })
   }
-
-  /** Conf-dispatched connected components over an (id1, id2) pair set
-    * — [[propagate]] or [[Components.starLabels]] per [[ccStar]]; the
-    * single entry point for [[clusterLabels]] AND [[dClusterIncr]]'s
-    * base/reduced graphs, so a mode choice applies to the whole
-    * clustering family (both produce the identical min-label
-    * output). */
-  private def cc(spark: SparkSession, pairs: DataFrame): DataFrame =
-    if (ccStar(spark)) Components
-      .starLabels(pairs.select(col("id1").as("a"), col("id2").as("b")))
-      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-    else propagate(pairs)
 
   /** INCREMENTAL near-dup clustering — the streaming-curation shape:
     * the corpus is split into a BASE (md5(doc_id) % 100 < 90) and a
@@ -961,7 +845,7 @@ object Dedup {
     // Eager checkpoints (not caches): both materialize here, while
     // `bands` is still cached, and neither needs caller-side release.
     val deltaPairs = verified(deltaCand).localCheckpoint()
-    val baseLabels = cc(spark, verified(baseCand))
+    val baseLabels = propagate(verified(baseCand))
     // Reduced edges: base endpoints collapse to their component label;
     // a doc with no base label (delta, or base-but-unclustered) is its
     // own node. Labels are base doc ids, so node ids never collide.
@@ -976,7 +860,7 @@ object Dedup {
       .select(least(col("a"), col("b")).as("id1"),
         greatest(col("a"), col("b")).as("id2"))
       .dropDuplicates("id1", "id2")
-    val reducedLabels = cc(spark, reducedPairs)
+    val reducedLabels = propagate(reducedPairs)
     val rl = reducedLabels.select(col("cluster_id").as("rlbl"), col("doc_id").as("node"))
     // Output domain = endpoints of the full pair graph: every
     // base-clustered doc, plus delta-edge endpoints not already there.

@@ -32,12 +32,10 @@ import graft.operators.WebCuration.{withUrl, withUrlSql}
   * edges by src, re-aggregate contributions by dst — the standard
   * distributed power-iteration shape. Rank state is one row per
   * domain; iteration lineage is cut with localCheckpoint (the
-  * [[Dedup]] propagate-round discipline). Float reductions go through
-  * [[floatFree]]'s conf switch: the default per-destination
-  * sorted-fold exists for cross-engine FLOAT PARITY at the gate
-  * (row size bounded by in-degree); `graft.graph.floatMode=free`
-  * swaps every reduction for a plain order-free `sum` — map-side
-  * combined, constant row size, the skew-safe web-scale shape.
+  * [[Dedup]] propagate-round discipline). Float reductions are the
+  * per-destination sorted fold ([[keyedFloatSum]]), which exists for
+  * cross-engine FLOAT PARITY at the gate; its row size is bounded by
+  * in-degree.
   */
 object Graph {
 
@@ -53,50 +51,25 @@ object Graph {
 
   private val Tlds = Seq("com", "org", "net", "io")
 
-  /** Float-summation mode for the iterative rankers, selected by the
-    * session conf `graft.graph.floatMode`:
-    *
-    *  - `parity` (default): every float reduction is the sorted-fold
-    *    discipline — contributions collect per key, sort by the far
-    *    endpoint, fold left from 0.0 — so ranks are bit-identical to
-    *    the unrolled-CTE DuckDB oracle and the driver's hash gate
-    *    proves the iteration exact. Row size grows with in-degree
-    *    (the collected neighborhood), fine up to the gate scale.
-    *  - `free`: plain order-free `sum` — map-side combined, constant
-    *    row size, the shape that survives a power-law web graph where
-    *    one hub's in-neighborhood must never land in a single row.
-    *    Last-bit nondeterministic under re-partitioning, semantically
-    *    identical; [[graft.GraphSpec]] pins rank-order equality and a
-    *    1e-9 value band against parity mode, and asserts the plan
-    *    carries no collect_list.
-    *
-    * Both modes share one plan skeleton (the fold happens inside the
-    * contribution frame either way), so the switch changes the
-    * aggregation expression only — never the join/shuffle structure. */
-  private def floatFree(spark: SparkSession): Boolean =
-    graft.core.Confs.enumConf(spark, "graft.graph.floatMode",
-      "parity", "free") == "free"
-
-  /** Per-key float reduction of `contrib` grouped by `group`: parity
-    * mode sorts the collected (far, contrib) structs by the far
-    * endpoint and folds left; free mode is a plain partial-aggregated
-    * sum. One (group, `out`) row per key either way. */
-  private def keyedFloatSum(free: Boolean, df: DataFrame, group: String,
+  /** Per-key float reduction of `contrib` grouped by `group`: the
+    * collected (far, contrib) structs sort by the far endpoint and
+    * fold left from 0.0, so ranks are bit-identical to the
+    * unrolled-CTE DuckDB oracle and the driver's hash gate proves the
+    * iteration exact. One (group, `out`) row per key; row size grows
+    * with in-degree (the collected neighborhood). */
+  private def keyedFloatSum(df: DataFrame, group: String,
       far: Column, contrib: Column, out: String): DataFrame =
-    if (free) df.groupBy(col(group)).agg(sum(contrib).as(out))
-    else df.groupBy(col(group))
+    df.groupBy(col(group))
       .agg(sort_array(collect_list(struct(far.as("k"), contrib.as("v"))))
         .as("cs"))
       .select(col(group),
         graft.functions.expr.FoldExpressions.sumArrayField(col("cs"), "v").as(out))
 
-  /** Whole-frame float total of `v` (one row, named `out`): parity
-    * mode folds sorted by `key`; free mode sums. Empty input yields
-    * 0.0 in both modes. */
-  private def globalFloatSum(free: Boolean, df: DataFrame, key: Column,
+  /** Whole-frame float total of `v` (one row, named `out`), folded
+    * sorted by `key`. Empty input yields 0.0. */
+  private def globalFloatSum(df: DataFrame, key: Column,
       v: Column, out: String): DataFrame =
-    if (free) df.agg(coalesce(sum(v), lit(0.0)).as(out))
-    else df.agg(sort_array(collect_list(struct(key.as("k"), v.as("v"))))
+    df.agg(sort_array(collect_list(struct(key.as("k"), v.as("v"))))
         .as("ts"))
       .select(graft.functions.expr.FoldExpressions.sumArrayField(col("ts"), "v")
         .as(out))
@@ -214,7 +187,6 @@ object Graph {
     * stay bit-identical and the gate hash-matches with rounding only
     * as presentation. */
   def gPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val free = floatFree(spark)
     val e = edges(spark, dir).localCheckpoint(false)
     val outw = e.groupBy(col("src")).agg(sum(col("w")).as("o_w"))
     val nDf = broadcast(nodes(e).agg(count(lit(1)).as("n")))
@@ -225,9 +197,9 @@ object Graph {
         (lit(1.0) / col("n")).as("pr"))
       .localCheckpoint(false)
     for (_ <- 1 to Iterations) {
-      val dm = globalFloatSum(free, pr.filter(col("outw") === 0L),
+      val dm = globalFloatSum(pr.filter(col("outw") === 0L),
         col("domain"), col("pr"), "dm")
-      val contribs = keyedFloatSum(free,
+      val contribs = keyedFloatSum(
         e.join(pr, e("src") === pr("domain")), "dst",
         col("src"), (col("pr") / col("outw")) * col("w"), "contrib")
       pr = pr.select(col("domain"), col("outw"))
@@ -300,13 +272,12 @@ object Graph {
     * hash-matches. Same two-shuffle-per-round scale shape; nodes
     * missing a side score 0 (coalesced at the end). */
   def gHits(spark: SparkSession, dir: String): DataFrame = {
-    val free = floatFree(spark)
     val e = edges(spark, dir).localCheckpoint(false)
     val ns = nodes(e).localCheckpoint(false)
     val nDf = broadcast(ns.agg(count(lit(1)).as("n")))
     def normalized(raw: DataFrame, valCol: String): DataFrame = {
       val tot = broadcast(
-        globalFloatSum(free, raw, col("domain"), col(valCol), "t"))
+        globalFloatSum(raw, col("domain"), col(valCol), "t"))
       raw.crossJoin(tot)
         .select(col("domain"), (col(valCol) / col("t")).as(valCol.stripSuffix("_raw")))
     }
@@ -315,12 +286,12 @@ object Graph {
       .localCheckpoint(false)
     var auth: DataFrame = null
     for (_ <- 1 to HitsIterations) {
-      val aRaw = keyedFloatSum(free,
+      val aRaw = keyedFloatSum(
         e.join(hub, e("src") === hub("domain")), "dst",
         col("src"), col("h") * col("w"), "a_raw")
         .withColumnRenamed("dst", "domain")
       auth = normalized(aRaw, "a_raw").localCheckpoint(false)
-      val hRaw = keyedFloatSum(free,
+      val hRaw = keyedFloatSum(
         e.join(auth, e("dst") === auth("domain")), "src",
         col("dst"), col("a") * col("w"), "h_raw")
         .withColumnRenamed("src", "domain")
@@ -827,8 +798,8 @@ object Graph {
     * by node as `min(struct(-lw, label))`, which map-side combines
     * to one struct per node per partition (never a collected
     * neighborhood; a 10⁸-degree hub folds its votes partially on
-    * every mapper — the PageRank `free`-mode shape but exact here,
-    * because vote weights are INTEGER sums, immune to float order).
+    * every mapper — exact, because vote weights are INTEGER sums,
+    * immune to float order).
     * Round lineage is cut per sweep with localCheckpoint, the
     * [[gPagerank]] discipline. Oracle: the same rounds unrolled as
     * CTEs with a window argmax — integer weights and string labels

@@ -20,10 +20,8 @@ import graft.core.Tables
   * aggregate, which Spark plans as a partial dedup on
   * (col_name, value) before the final count — both exchanges hash on
   * keys whose cardinality scales with the data, so no single-reducer
-  * choke. At 100 TB the exact NDV is the one expensive term; the
-  * production swap — `graft.profile.ndv=approx`, a mergeable HLL
-  * sketch, single pass, no dedup exchange — is a conf switch. The
-  * DEFAULT stays exact because the gate hash-compares values and HLL
+  * choke. At 100 TB the exact NDV is the one expensive term; it stays
+  * exact because the gate hash-compares values and HLL
   * implementations differ per engine (the [[Analytics]]
   * q_approx_distinct precedent: sketches are rows-only by design; an
   * exact profile stays hash-green).
@@ -45,21 +43,8 @@ object Profiling {
 
   /** q_profile — per-column (rows, nulls, NDV, min, max) over
     * lineitem. Output: (col_name, n_rows, n_null, ndv, min_val,
-    * max_val), one row per profiled column.
-    *
-    * `graft.profile.ndv=approx` swaps the exact distinct aggregate for
-    * `approx_count_distinct` (mergeable HLL, rsd 5%) — the 100 TB
-    * path: a single pass with NO (col_name, value) dedup exchange, the
-    * one expensive term gone. Default stays exact so the hash gate
-    * keeps comparing true values (HLL estimates differ per engine —
-    * the q_approx_distinct precedent); ProfilingSpec pins the approx
-    * plan shape (no Expand-side dedup) and its relative error. */
+    * max_val), one row per profiled column. */
   def qProfile(spark: SparkSession, dir: String): DataFrame = {
-    val ndv = graft.core.Confs.enumConf(spark, "graft.profile.ndv",
-        "exact", "approx") match {
-      case "approx" => approx_count_distinct(col("v"), 0.05)
-      case _ => countDistinct(col("v"))
-    }
     // lineitem is one parquet row group at gate scale, so the scan is
     // ONE task while the unpivot fans out md5/cast work per (row, col):
     // spread it across the session width first (no-op at real scale —
@@ -73,7 +58,7 @@ object Profiling {
       .agg(
         count(lit(1)).as("n_rows"),
         (count(lit(1)) - count(col("v"))).as("n_null"),
-        ndv.as("ndv"),
+        countDistinct(col("v")).as("ndv"),
         min(col("v")).as("min_val"),
         max(col("v")).as("max_val"))
       .orderBy("col_name")
@@ -129,8 +114,8 @@ object Profiling {
     val li = Tables.spread(Tables(spark, dir).lineitem)
     val stackArgs = SkewCols.map(c => s"'$c', cast($c as bigint)").mkString(", ")
     // lazy localCheckpoint: the counts frame is read by the totals agg
-    // and one top-K arm per column — the ngramPrefix barrier
-    // discipline (blocks released when the frame drops)
+    // and one top-K arm per column (blocks released when the frame
+    // drops)
     val counts = li
       .select(expr(s"stack(${SkewCols.length}, $stackArgs) as (col_name, k)"))
       .groupBy("col_name", "k").agg(count(lit(1)).as("cnt"))

@@ -1089,8 +1089,7 @@ object Similarity {
     // is referenced by all five arms' joins plus its own count, but a
     // cache() here would pin it for the session (nobody owns the
     // unpersist once this frame is returned) — checkpoint blocks are
-    // released by the ContextCleaner when the frame is GC'd, the
-    // ngramPrefix discipline.
+    // released by the ContextCleaner when the frame is GC'd.
     val truth = sAnnBrute(spark, dir)
       .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
     val arms: Seq[(String, DataFrame)] = Seq(

@@ -527,18 +527,6 @@ object TextAnalysis {
 
   // ------------------------------------------------------------ jsd
 
-  /** Fold mode for [[tJsd]]'s per-source divergence sum, conf
-    * `graft.text.jsdFold` — the [[Graph]] `floatMode` pattern:
-    * `parity` (default) collects each source's per-word terms sorted
-    * ascending and folds from 0.0, making the divergence bit-identical
-    * to the oracle (row size bounded by the VOCABULARY — fine to
-    * ~10⁶ words); `free` is a plain map-side-combined `sum` — constant
-    * row size, the shape for a 10⁷⁺-word web vocabulary, last-bit
-    * nondeterministic, rank-pinned against parity in PipelineSpec. */
-  private def jsdFree(spark: SparkSession): Boolean =
-    graft.core.Confs.enumConf(spark, "graft.text.jsdFold",
-      "parity", "free") == "free"
-
   /** One JSD term 0.5·p·ln(p/m) + 0.5·q·ln(q/m), m = (p+q)/2, with
     * the 0·ln0 := 0 CASE guards — THE one copy of the term's parity
     * spelling; both [[tJsd]] and [[tDrift]] (and their oracles' CASE
@@ -550,15 +538,13 @@ object TextAnalysis {
   }
 
   /** Per-source reduction of a (source, term) frame to (source, s)
-    * under [[jsdFree]]'s mode — THE one copy of the JSD fold's parity
-    * spelling ([[tJsd]] and [[tDrift]] both gate on it): parity
-    * collects terms sorted ascending and folds from 0.0 (what the
-    * oracles' `list(term ORDER BY term)` + `list_reduce` replay);
-    * free is a plain map-side-combined sum. */
-  private def foldJsdTerms(terms: DataFrame, free: Boolean,
-      keys: Seq[String]): DataFrame =
-    if (free) terms.groupBy(keys.map(col): _*).agg(sum("term").as("s"))
-    else terms.groupBy(keys.map(col): _*)
+    * — THE one copy of the JSD fold's parity spelling ([[tJsd]] and
+    * [[tDrift]] both gate on it): terms collect sorted ascending and
+    * fold from 0.0 (what the oracles' `list(term ORDER BY term)` +
+    * `list_reduce` replay), so the divergence is bit-identical to the
+    * oracle; row size is bounded by the VOCABULARY. */
+  private def foldJsdTerms(terms: DataFrame, keys: Seq[String]): DataFrame =
+    terms.groupBy(keys.map(col): _*)
       .agg(sort_array(collect_list(col("term"))).as("ts"))
       .select(keys.map(col) :+
         graft.functions.expr.FoldExpressions.sumArray(col("ts")).as("s"): _*)
@@ -583,7 +569,7 @@ object TextAnalysis {
     * totals. Float parity: probabilities are integer-over-integer
     * doubles spelled identically in both engines; zero counts route
     * through the same CASE guards (0·ln0 := 0); the per-source fold
-    * follows [[jsdFree]]. */
+    * is [[foldJsdTerms]]. */
   def tJsd(spark: SparkSession, dir: String): DataFrame =
     jsdBySegments(spark, dir, Seq("source"))
 
@@ -601,12 +587,11 @@ object TextAnalysis {
   /** The shared per-segment JSD skeleton ([[tJsd]] scaladoc): one
     * corpus scan → (segment, word) counts; vocab-bounded grid via
     * broadcast segment totals; integer-over-integer probabilities;
-    * the [[jsdFree]]-gated fold. `segCols` is the segment key —
+    * the [[foldJsdTerms]] fold. `segCols` is the segment key —
     * ("source") for the pooled gate row, ("source", "lang") for the
     * segmented one. */
   private def jsdBySegments(spark: SparkSession, dir: String,
       segCols: Seq[String]): DataFrame = {
-    val free = jsdFree(spark)
     val d = docsSpread(spark, dir)
     val seg = segCols.map(col)
     val counts = d.select(seg :+ explode(words(col("text"))).as("word"): _*)
@@ -634,7 +619,7 @@ object TextAnalysis {
     val probs = grid.select(seg ++ Seq(ps.as("ps"), pr.as("pr")): _*)
     val terms = probs.select(seg :+
       jsdTerm(col("ps"), col("pr")).as("term"): _*)
-    foldJsdTerms(terms, free, segCols).join(perSrc, segCols)
+    foldJsdTerms(terms, segCols).join(perSrc, segCols)
       .select(seg ++ Seq(col("ns").cast("long").as("n_words"),
         col("nv").cast("long").as("n_distinct_words"),
         stableRound(col("s") / log(lit(2.0)), 6).as("jsd_bits")): _*)
@@ -739,8 +724,7 @@ object TextAnalysis {
     * on the totals). The per-source vocabulary is the grid — never
     * corpus-bounded — and the JSD term/fold/parity discipline is
     * [[tJsd]]'s verbatim (integer-over-integer probabilities, shared
-    * CASE guards, ascending-term parity fold under [[jsdFree]]'s
-    * conf, order-free sum in `free` mode). */
+    * CASE guards, ascending-term parity fold). */
   def tDrift(spark: SparkSession, dir: String): DataFrame =
     driftBySegments(spark, dir, Seq("source"))
 
@@ -771,92 +755,32 @@ object TextAnalysis {
     * its DISTINCT gram-hash set once, delta postings hash-join it on
     * the gram key — linear, uniform (gram hashes), never doc×doc. At
     * 100 TB the base set is corpus-sized but the join shuffles only
-    * (id, hash) pairs on a key with corpus-scale cardinality; the
-    * cheaper approximate tier (base grams in a bloom sidecar, narrow
-    * probe, no join) trades exactness the gate's hash compare can't.
+    * (id, hash) pairs on a key with corpus-scale cardinality.
     *
     * Parity: counts are integers; novelty is one correctly-rounded
-    * expression spelled identically in both engines.
-    *
-    * `graft.text.noveltyProbe=bloom` swaps the exact base-set join for
-    * an IN-PLAN Bloom probe — the 100 TB tier BUILT, not documented:
-    * base gram hashes expand to [[NoveltyBloomK]] bit positions in a
-    * [[NoveltyBloomBits]]-slot space and collapse to the DISTINCT
-    * occupied-bit rows (bounded by the bit space, not the corpus —
-    * never collected, never broadcast whole, unlike a driver-built
-    * filter); a delta gram counts seen iff all K of its probe rows hit
-    * (no false negatives by construction, so bloom novelty is a LOWER
-    * bound on exact). Default stays exact so the gate keeps
-    * hash-comparing true values (the q_profile ndv=approx precedent);
-    * the spec pins no-false-negatives, per-doc n_grams identity, and a
-    * measured false-positive bound. */
+    * expression spelled identically in both engines. */
   def tNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val probe = graft.core.Confs.enumConf(spark, "graft.text.noveltyProbe",
-      "exact", "bloom")
     val d = docsSpread(spark, dir)
       .withColumn("b", md5_32(col("doc_id").cast("string")) % 100)
     val sets = d
       .select(col("doc_id"), col("b"), Dedup.contamHashes(col("text")).as("hs"))
       .filter(size(col("hs")) > 0)
     val posts = sets.select(col("doc_id"), col("b"), explode(col("hs")).as("h"))
-    // Both arms keep n_grams inside the per-doc aggregation (posts
-    // carry every distinct gram, seen or not) — no third corpus pass
-    // to re-derive set sizes.
-    val counts = probe match {
-      case "bloom" =>
-        val bits = posts.filter(col("b") < 90)
-          .select(explode(bloomPositions(col("h"))).as("bit"))
-          .distinct().withColumn("hit", lit(1L))
-        posts.filter(col("b") >= 90)
-          .select(col("doc_id"), col("h"),
-            explode(bloomPositions(col("h"))).as("bit"))
-          .join(bits, Seq("bit"), "left")
-          // a gram is (maybe-)seen iff every one of its K probe rows
-          // matched an occupied bit
-          .groupBy("doc_id", "h")
-          .agg(sum(coalesce(col("hit"), lit(0L))).as("nb"))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(when(col("nb") === NoveltyBloomK, 1L).otherwise(0L))
-              .as("n_seen"))
-      case _ =>
-        val base = posts.filter(col("b") < 90)
-          .select("h").distinct().withColumn("seen", lit(1L))
-        posts.filter(col("b") >= 90)
-          .join(base, Seq("h"), "left")
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as("n_grams"),
-            sum(coalesce(col("seen"), lit(0L))).as("n_seen"))
-    }
-    counts
+    // n_grams stays inside the per-doc aggregation (posts carry
+    // every distinct gram, seen or not) — no third corpus pass to
+    // re-derive set sizes.
+    val base = posts.filter(col("b") < 90)
+      .select("h").distinct().withColumn("seen", lit(1L))
+    posts.filter(col("b") >= 90)
+      .join(base, Seq("h"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_grams"),
+        sum(coalesce(col("seen"), lit(0L))).as("n_seen"))
       .select(col("doc_id"), col("n_grams"), col("n_seen"),
         stableRound(lit(1.0) - col("n_seen").cast("double") /
           col("n_grams").cast("double"), 6).as("novelty"))
       .orderBy("doc_id")
   }
-
-  /** Bloom geometry for the novelty probe: a prime slot count keeps
-    * the low-bit-only modulus well spread; K odd multipliers give
-    * near-independent positions. Fill at the gate SFs is far under 1%
-    * — the spec's measured-fpp bound has real slack. */
-  val NoveltyBloomBits = 4194301 // largest prime < 2^22
-  val NoveltyBloomK = 3
-  private val NoveltyBloomMults = Seq(1000000007L, 998244353L, 777767777L)
-
-  /** The K probe positions of a 32-bit gram hash (h·c mod M — h and c
-    * both bounded so the product stays well inside Long). Shared with
-    * the streaming gate ([[graft.streaming.DocStream]] stNovelty), so
-    * batch and stream bloom verdicts cannot diverge. */
-  private[graft] def bloomPositions(h: Column): Column =
-    array(NoveltyBloomMults.map(c =>
-      pmod(h.cast("long") * lit(c), lit(NoveltyBloomBits.toLong))): _*)
-
-  /** JVM twin of [[bloomPositions]] for typed streaming code — the
-    * same (h·c mod M) arithmetic on the same constants (h is a
-    * nonnegative 32-bit value, so % ≡ pmod and the product stays
-    * inside Long). */
-  private[graft] def bloomPositionsJvm(h: Long): Array[Long] =
-    NoveltyBloomMults.map(c => (h * c) % NoveltyBloomBits).toArray
 
   lazy val tNoveltySql: String = {
     val n = Dedup.ContamNgram
@@ -890,7 +814,6 @@ object TextAnalysis {
     * verbatim. */
   private def driftBySegments(spark: SparkSession, dir: String,
       segCols: Seq[String]): DataFrame = {
-    val free = jsdFree(spark)
     val d = docsSpread(spark, dir)
     val seg = segCols.map(col)
     val isDelta = (md5_32(col("doc_id").cast("string")) % 100) >= 90
@@ -912,7 +835,7 @@ object TextAnalysis {
     val probs = grid.select(seg ++ Seq(pb.as("pb"), pd.as("pd")): _*)
     val terms = probs.select(seg :+
       jsdTerm(col("pb"), col("pd")).as("term"): _*)
-    foldJsdTerms(terms, free, segCols).join(perSeg, segCols)
+    foldJsdTerms(terms, segCols).join(perSeg, segCols)
       .select(seg ++ Seq(col("nb").cast("long").as("base_words"),
         col("nd").cast("long").as("delta_words"),
         stableRound(col("s") / log(lit(2.0)), 6).as("jsd_bits")): _*)

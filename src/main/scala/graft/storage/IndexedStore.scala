@@ -5,7 +5,7 @@ import java.util.Properties
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Persistent, layout-indexed parquet storage — the Spark-native
   * re-expression of the reference's index layer (src/idx.rs).
@@ -1452,6 +1452,10 @@ object IndexedStore {
   private def bloomDir(path: String, column: String): String =
     new HPath(path, s"_graft_bloom_$column").toString
 
+  /** The sidecar's row shape, as [[writeBloom]] writes it. */
+  private val BloomSchema = StructType(Seq(StructField("bucket", IntegerType),
+    StructField("word", IntegerType), StructField("bits", LongType)))
+
   /** 4 independent bit positions from disjoint 8-hex-char md5 slices
     * of the value's cast-to-string form — the build side (Spark
     * expressions) and the probe side ([[bloomBitsOf]], evaluating the
@@ -1942,21 +1946,31 @@ object IndexedStore {
     from.filter(pred).drop(BucketCol)
     }
 
-    /** Buckets whose bloom filter passes for value `v` on column `c`
-      * (reads only the probe-bit words of the tiny sidecar). */
+    /** Buckets whose bloom filter passes for value `v` on column `c`.
+      * The tiny sidecar's parquet files are read on the driver with
+      * the local probe path's reader, as [[tombstoned]] is: no planned
+      * query, no job. Only the probe-bit words are kept, OR-merged per
+      * (bucket, word) — appends add files that repeat words. */
     private def bloomBuckets(c: String, v: Any): Option[Seq[Int]] =
       bloomBitsOf(v, base.schema(c).dataType).map { bits =>
-      val words = bits.map(_ / 64).distinct
-      val rows = spark.read.parquet(bloomDir(path, c))
-        .filter(col("word").isin(words: _*)).collect()
-      val byBucket = rows.groupBy(_.getAs[Int]("bucket")).map { case (b, rs) =>
-        b -> rs.groupBy(_.getAs[Int]("word"))
-          .map { case (w, ws) => w -> ws.map(_.getAs[Long]("bits")).reduce(_ | _) }
-      }
-      byBucket.collect { case (b, wordBits)
-          if bits.forall(bit =>
-            (wordBits.getOrElse(bit / 64, 0L) & (1L << (bit % 64))) != 0) => b
-      }.toSeq.sorted
+      val words = bits.map(_ / 64).toSet
+      val read = CkptLocalScan.reader(spark, BloomSchema, StructType(Nil), BloomSchema, Map.empty)
+      val dir = new HPath(bloomDir(path, c))
+      val wordBits = scala.collection.mutable.Map.empty[(Int, Int), Long]
+      hadoopFs(path).listStatus(dir).iterator
+        .filter { st =>
+          val n = st.getPath.getName
+          st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+        }
+        .foreach { st =>
+          read(CkptLocalScan.wholeFile(st.getPath.toString, st.getLen, st.getModificationTime))
+            .foreach { r =>
+              val key = (r.getInt(0), r.getInt(1))
+              if (words(key._2)) wordBits(key) = wordBits.getOrElse(key, 0L) | r.getLong(2)
+            }
+        }
+      wordBits.keys.map(_._1).toSeq.distinct.filter(b => bits.forall(bit =>
+        (wordBits.getOrElse((b, bit / 64), 0L) & (1L << (bit % 64))) != 0)).sorted
     }
 
     /** The reference's estimate-driven index choice against this open

@@ -276,33 +276,14 @@ object DocStream {
     * arrival scores independently (a door decision is per-arrival; a
     * re-delivered doc re-scores — unlike [[stDecontam]]'s accumulating
     * rollup, nothing carries across batches, so no state at all).
-    *
-    * Probe tier follows `graft.text.noveltyProbe` exactly like the
-    * batch operator:
-    *  - `exact` (default, oracle = [[TextAnalysis.tNoveltySql]]
-    *    verbatim): arriving gram postings LEFT-join the base's
-    *    distinct gram-hash set — corpus-sized, the gate-exactness arm.
-    *  - `bloom` — the PRODUCTION door shape: the base collapses to a
-    *    [[TextAnalysis.NoveltyBloomBits]]-slot bit set (a fixed
-    *    ~512 KB java.util.BitSet built from the bounded occupied-bit
-    *    rows, never from corpus-sized data — the bounded-collect
-    *    class) broadcast to executors; each arrival then scores in a
-    *    NARROW stateless map — no join, no shuffle, nothing
-    *    corpus-sized anywhere near the stream. Spec-pinned ≡ the
-    *    batch bloom tier row-for-row. */
+    * Arriving gram postings LEFT-join the base's distinct gram-hash
+    * set, exactly like the batch operator (oracle =
+    * [[TextAnalysis.tNoveltySql]] verbatim). */
   def stNovelty(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Parity.stableRound
     val stream = docStream(spark, dir).select(col("doc_id"), col("text"))
     val s = stream.sparkSession
-    // conf reads on the ROOT session — streamSession is a fresh
-    // newSession() that does not see the caller's conf (the
-    // statePartitions knob reads the same way)
-    val probe = graft.core.Confs.enumConf(spark, "graft.text.noveltyProbe",
-      "exact", "bloom")
-    val scored = probe match {
-      case "bloom" => noveltyBloomPipeline(stream, baseBloomBits(s, dir)).toDF()
-      case _ => noveltyExactPipeline(stream, baseShingleSet(s, dir)).toDF()
-    }
+    val scored = noveltyPipeline(stream, baseShingleSet(s, dir)).toDF()
     EventStream.runToTable(scored, "append")
       .select(col("doc_id"), col("n_grams"), col("n_seen"),
         stableRound(lit(1.0) - col("n_seen").cast("double") /
@@ -320,25 +301,10 @@ object DocStream {
       .distinct()
   }
 
-  /** The base snapshot as a broadcast Bloom bit set: occupied-bit rows
-    * computed in-plan (distinct, bounded by the FIXED bit space — the
-    * collect is never corpus-sized), folded into one
-    * [[TextAnalysis.NoveltyBloomBits]]-bit BitSet. */
-  private[graft] def baseBloomBits(s: SparkSession, dir: String)
-      : org.apache.spark.broadcast.Broadcast[java.util.BitSet] = {
-    import graft.operators.TextAnalysis
-    val bits = new java.util.BitSet(TextAnalysis.NoveltyBloomBits)
-    baseShingleSet(s, dir)
-      .select(explode(TextAnalysis.bloomPositions(col("h"))).as("bit"))
-      .distinct().collect()
-      .foreach(r => bits.set(r.getLong(0).toInt))
-    s.sparkContext.broadcast(bits)
-  }
-
-  /** Exact tier: gram postings LEFT-join the base set, then a
+  /** Gram postings LEFT-join the base set, then a
     * per-doc rollup (a doc's rows are atomic within its batch; no
     * state is kept — each arrival scores independently). */
-  private[graft] def noveltyExactPipeline(stream: DataFrame,
+  private[graft] def noveltyPipeline(stream: DataFrame,
       base: DataFrame): org.apache.spark.sql.Dataset[NovOut] = {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     import graft.functions.TextFunctions.md5_32
@@ -353,8 +319,7 @@ object DocStream {
       // NO broadcast hint here, unlike stDecontam: the base gram set
       // is corpus-sized (90% of all documents), so a forced broadcast
       // would turn "big join" into a hard failure past the 8 GB
-      // broadcast limit — the planner picks per its size estimate,
-      // and the bloom tier is the shape that actually scales
+      // broadcast limit — the planner picks per its size estimate
       .join(base.withColumn("seen", lit(1L)), Seq("h"), "left_outer")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("seen"), lit(0L)).as("seen")).as[NovRow]
@@ -366,30 +331,6 @@ object DocStream {
           var ns = 0L
           rows.foreach { r => g = r.n_grams; ns += r.seen }
           Iterator.single(NovOut(id, g, ns))
-      }
-  }
-
-  /** Bloom tier: a narrow stateless per-row score against the
-    * broadcast bit set — no join, no shuffle. Position arithmetic is
-    * [[TextAnalysis.bloomPositionsJvm]], the JVM twin of the batch
-    * tier's column expression. */
-  private[graft] def noveltyBloomPipeline(stream: DataFrame,
-      bits: org.apache.spark.broadcast.Broadcast[java.util.BitSet])
-      : org.apache.spark.sql.Dataset[NovOut] = {
-    import graft.functions.TextFunctions.md5_32
-    import graft.operators.TextAnalysis
-    val s = stream.sparkSession
-    import s.implicits._
-    stream
-      .filter(md5_32(col("doc_id").cast("string")) % 100 >= 90)
-      .select(col("doc_id"), Dedup.contamHashes(col("text")).as("hs"))
-      .filter(size(col("hs")) > 0)
-      .as[(Long, Seq[Long])]
-      .map { case (id, hs) =>
-        val b = bits.value
-        val seen = hs.count(h =>
-          TextAnalysis.bloomPositionsJvm(h).forall(p => b.get(p.toInt)))
-        NovOut(id, hs.size.toLong, seen.toLong)
       }
   }
 

@@ -69,13 +69,12 @@ class CkptLocalScanSpec extends SparkSpec {
     rows(out)
   }
 
-  /** A local probe's rows against the model's. `built` is a frame
-    * constructed before counting starts (a probe whose construction
-    * itself reads a sidecar). */
+  /** A local probe's rows against the model's; the jobs counted cover
+    * building the probe frame as well as collecting it. */
   private def parity(h: IndexedStore.OpenStore, model: DataFrame,
-      conds: Seq[Condition], built: Option[DataFrame] = None): Seq[String] = {
+      conds: Seq[Condition]): Seq[String] = {
     val cols = model.columns.toSeq
-    val got = servedLocally(cols)(built.getOrElse(h.find(conds)))
+    val got = servedLocally(cols)(h.find(conds))
     assert(got == rows(model.filter(Condition.all(conds)).select(cols.map(col): _*)
       .collect().toSeq), s"local probe diverges from the model for $conds")
     got
@@ -140,10 +139,10 @@ class CkptLocalScanSpec extends SparkSpec {
     IndexedStore.write(store.data, path, HashIndex("c_mktsegment", 8), bloom = Seq("c_name"))
     val h = IndexedStore.open(spark, path)
     val conds = Seq(Condition.eq("c_name", "Customer#000000042"))
-    // the bloom sidecar is read while the frame is built; the probe
-    // itself is one local scan over the buckets whose filter passes
+    // find() reads the bloom sidecar on the driver and the probe is one
+    // local scan over the buckets whose filter passes: no job for either
+    assert(parity(h, store.data, conds).size == 1)
     val probe = h.find(conds)
-    assert(parity(h, store.data, conds, Some(probe)).size == 1)
     val files = { probe.collect(); CkptLocalScan.filesRead(probe.queryExecution.executedPlan) }
     assert(files >= 1 && files < 8, s"bloom probe read $files of 8 bucket files")
   }

@@ -55,62 +55,6 @@ class ClassifySpec extends SparkSpec {
     assert(acc > base + 0.05, s"accuracy $acc does not beat base rate $base")
   }
 
-  test("sampled Newton converges on a quarter-corpus Hessian, stays deterministic") {
-    // the 100 TB curvature path: Hessian from an md5-selected doc
-    // subset, gradient and line-search loss still exact — so the
-    // monotone invariant survives and quality lands near the exact
-    // solver's (an approximate DIRECTION costs iterations, never
-    // correctness)
-    spark.conf.set("graft.classify.hessian", "sampled")
-    try {
-      val m1 = Classify.train(spark, feats, nDocs)
-      assert(m1.losses.zip(m1.losses.tail).forall { case (a, b) => b <= a },
-        s"loss rose under sampled Newton: ${m1.losses.mkString(", ")}")
-      assert(m1.losses.last < 0.3,
-        s"sampled Newton failed to converge: ${m1.losses.last}")
-      assert(m1.losses.last <= model.losses.last * 1.5 + 0.05,
-        s"sampled final loss ${m1.losses.last} far from exact ${model.losses.last}")
-      val m2 = Classify.train(spark, feats, nDocs)
-      assert(m1.weights.sameElements(m2.weights) && m1.losses == m2.losses,
-        "sampled Newton must stay bit-deterministic")
-      spark.conf.set("graft.classify.hessian", "bogus")
-      intercept[IllegalArgumentException] {
-        Classify.train(spark, feats, nDocs)
-      }
-    } finally spark.conf.unset("graft.classify.hessian")
-  }
-
-  test("L-BFGS mode reaches the Newton loss neighborhood with no curvature pass") {
-    // the third hessian mode: pure first-order — direction from the
-    // two-loop recursion over driver-held (s, y) pairs, so the Dim²-
-    // keyed Hessian shuffle (the one superlinear term) never runs;
-    // the price is more (cheaper) iterations, the standard L-BFGS
-    // trade. Gradient + line-search loss stay exact and integer-
-    // quantized, so the monotone invariant and bit-determinism carry
-    // over unchanged.
-    spark.conf.set("graft.classify.hessian", "lbfgs")
-    try {
-      val m1 = Classify.train(spark, feats, nDocs)
-      assert(m1.losses.length == Classify.LbfgsEpochs)
-      assert(m1.losses.zip(m1.losses.tail).forall { case (a, b) => b <= a },
-        s"loss rose under L-BFGS: ${m1.losses.mkString(", ")}")
-      assert(m1.losses.last <= model.losses.last * 1.05,
-        s"L-BFGS final loss ${m1.losses.last} not in the Newton " +
-          s"neighborhood ${model.losses.last}")
-      val m2 = Classify.train(spark, feats, nDocs)
-      assert(m1.weights.sameElements(m2.weights) && m1.losses == m2.losses,
-        "L-BFGS must stay bit-deterministic")
-      // the §16 Wolfe-search measurement: a stricter (Wolfe) accept
-      // rule only pays when plain backtracking shrinks or rejects
-      // steps the curvature condition would have kept — record the
-      // accepted step trace; if it is ~all 1.0 (the well-scaled
-      // two-loop direction accepting its natural step), a Wolfe
-      // search has nothing to improve here
-      assert(m1.steps.length == Classify.LbfgsEpochs)
-      info(s"accepted L-BFGS steps: ${m1.steps.mkString(", ")}")
-    } finally spark.conf.unset("graft.classify.hessian")
-  }
-
   test("IRLS reliability diagram is well-formed (the spec-side calibration pin)") {
     // d_classify_calib hash-gates the closed-form NB scorer (the SQL-
     // replayable family member); the IRLS model's own calibration is

@@ -87,15 +87,57 @@ class ConfsSpec extends SparkSpec {
     val inCode = sources.flatMap(LiteralKey.findAllMatchIn(_).map(_.group(1)))
     assert(inCode.size == calls,
       s"$calls Confs reader calls but ${inCode.size} literal graft.* keys")
+    // an enumConf call's allowed values: every string literal after the key
+    val EnumCall = """Confs\.enumConf\(\s*[^,()]+,\s*"(graft\.[^"]+)"((?:\s*,\s*"[^"]*")+)\s*\)""".r
+    val Literal = """"([^"]*)"""".r
+    val enumValues = sources.flatMap(EnumCall.findAllMatchIn(_).map(m =>
+      m.group(1) -> Literal.findAllMatchIn(m.group(2)).map(_.group(1)).toSet))
+    assert(enumValues.size == sources.map("""Confs\.enumConf\(""".r.findAllMatchIn(_).size).sum,
+      "an enumConf call's values are not all string literals")
     val readme = scala.io.Source.fromFile("README.md", "UTF-8")
     val lines = try readme.getLines().toSeq finally readme.close()
+    // the conf table only: its header row, the rule, then the rows
+    // (the retired-conf table in the same section is not read here)
     val section = lines.dropWhile(_ != "## Session confs").drop(1)
       .takeWhile(!_.startsWith("## "))
-    val KeyCell = """\| `(graft\.[^`]+)` \|.*""".r
-    val inTable = section.collect { case KeyCell(k) => k }
+      .dropWhile(!_.startsWith("| conf |")).drop(2).takeWhile(_.startsWith("|"))
+    val Row = """\| `(graft\.[^`]+)` \| ([^|]*) \|.*""".r
+    val inTable = section.collect { case Row(k, values) => k -> values }
     assert(inTable.nonEmpty, "README has no Session confs table")
-    val (code, table) = (inCode.toSet, inTable.toSet)
+    val (code, table, listed) = (inCode.toSet, inTable.map(_._1).toSet, Confs.Keys.toSet)
+    assert(Confs.Keys.size == listed.size, s"Confs.Keys repeats a key: ${Confs.Keys}")
     assert((code -- table).isEmpty, s"read in code, missing from README: ${code -- table}")
     assert((table -- code).isEmpty, s"in README, read nowhere: ${table -- code}")
+    assert(listed == code, s"Confs.Keys ≠ keys read in code: " +
+      s"unlisted ${code -- listed}, read nowhere ${listed -- code}")
+    val Backticked = """`([^`]+)`""".r
+    enumValues.foreach { case (k, allowed) =>
+      val cell = inTable.collectFirst { case (`k`, v) => v }.get
+      val documented = Backticked.findAllMatchIn(cell).map(_.group(1)).toSet
+      assert(documented == allowed,
+        s"README values for $k name $documented, the code takes $allowed")
+    }
+  }
+
+  test("SPARK_GRAFT_CONF rejects a graft.* key graft does not read, naming it") {
+    try for (retired <- Seq("graft.profile.ndv=approx", "graft.cluster.ccMode=star")) {
+      val key = retired.takeWhile(_ != '=')
+      val ex = intercept[RuntimeException] {
+        graft.core.Sessions.applyEnvConf(spark, Some(s"graft.store.zonemap=true,$retired"))
+      }
+      assert(ex.getMessage.contains(s"'$key'"), ex.getMessage)
+      assert(spark.conf.getOption(key).isEmpty, s"$key was set before the throw")
+    } finally spark.conf.unset("graft.store.zonemap")
+    // known graft keys and non-graft keys pass through
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      graft.core.Sessions.applyEnvConf(spark,
+        Some("graft.store.zonemap=false,spark.sql.shuffle.partitions=3"))
+      assert(spark.conf.get("graft.store.zonemap") == "false")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "3")
+    } finally {
+      spark.conf.unset("graft.store.zonemap")
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+    }
   }
 }

@@ -125,19 +125,6 @@ class DocStreamSpec extends SparkSpec {
     assert(got.nonEmpty, "fixture has no delta docs — degenerate")
   }
 
-  test("st_novelty bloom tier equals the batch bloom tier row-for-row") {
-    spark.conf.set("graft.text.noveltyProbe", "bloom")
-    try {
-      val got = DocStream.stNovelty(spark, sf)
-        .as[(Long, Long, Long, Double)].collect().toSet
-      val expect = graft.operators.TextAnalysis.tNovelty(spark, sf)
-        .as[(Long, Long, Long, Double)].collect().toSet
-      assert(got == expect,
-        s"bloom stream vs batch: extra=${got -- expect} missing=${expect -- got}")
-      assert(got.nonEmpty)
-    } finally spark.conf.unset("graft.text.noveltyProbe")
-  }
-
   test("st_novelty re-scores independently on re-delivery — no cross-batch state") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions._
@@ -152,7 +139,7 @@ class DocStreamSpec extends SparkSpec {
       .select(explode(graft.operators.Dedup.contamHashes(col("text"))).as("h"))
       .distinct()
     val mem = MemoryStream[(Long, String)]
-    val out = DocStream.noveltyExactPipeline(
+    val out = DocStream.noveltyPipeline(
       mem.toDF.toDF("doc_id", "text"), base)
     val name = "novelty_xbatch"
     val q = out.toDF.writeStream.format("memory")

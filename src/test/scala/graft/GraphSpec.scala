@@ -64,52 +64,6 @@ class GraphSpec extends SparkSpec {
     assert(run() == run())
   }
 
-  test("floatMode=free: rank-identical to parity, no collect_list in either plan") {
-    // The order-free mode is the 100 TB shape (plain partial-aggregated
-    // sums — no per-destination neighborhood ever collects into one
-    // row). It must agree with parity mode to float-noise tolerance,
-    // produce the identical ranking, and its plan must carry no
-    // collect_list anywhere (parity's skew hazard is exactly that).
-    def byDomain(df: org.apache.spark.sql.DataFrame, vcol: Int) =
-      df.collect().map(r => r.getString(0) -> r.getDouble(vcol)).toMap
-    val parityPr = byDomain(Graph.gPagerank(spark, sf), 2)
-    val parityHits = Graph.gHits(spark, sf).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    spark.conf.set("graft.graph.floatMode", "free")
-    try {
-      val freeDf = Graph.gPagerank(spark, sf)
-      val plan = freeDf.queryExecution.optimizedPlan.toString
-      assert(!plan.contains("collect_list"),
-        s"free mode must not collect neighborhoods:\n${plan.take(2000)}")
-      val freePr = byDomain(freeDf, 2)
-      assert(freePr.keySet == parityPr.keySet)
-      freePr.foreach { case (d, v) =>
-        assert(math.abs(v - parityPr(d)) < 1e-9, s"$d: $v vs ${parityPr(d)}")
-      }
-      // identical ranking, not just close values
-      assert(freePr.toSeq.sortBy { case (d, v) => (-v, d) }.map(_._1) ==
-        parityPr.toSeq.sortBy { case (d, v) => (-v, d) }.map(_._1))
-      val freeHitsDf = Graph.gHits(spark, sf)
-      val hitsPlan = freeHitsDf.queryExecution.optimizedPlan.toString
-      assert(!hitsPlan.contains("collect_list"),
-        s"free mode must not collect neighborhoods:\n${hitsPlan.take(2000)}")
-      val freeHits = freeHitsDf.collect()
-        .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-      assert(freeHits.keySet == parityHits.keySet)
-      freeHits.foreach { case (d, (h, a)) =>
-        assert(math.abs(h - parityHits(d)._1) < 1e-9, s"$d hub: $h")
-        assert(math.abs(a - parityHits(d)._2) < 1e-9, s"$d auth: $a")
-      }
-    } finally spark.conf.unset("graft.graph.floatMode")
-  }
-
-  test("floatMode: a typo'd value fails loudly") {
-    spark.conf.set("graft.graph.floatMode", "fast")
-    try intercept[IllegalArgumentException] {
-      Graph.gPagerank(spark, sf)
-    } finally spark.conf.unset("graft.graph.floatMode")
-  }
-
   test("g_hits: matches an independent reference iteration; scores L1-normalize") {
     val e = Graph.edges(spark, sf).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))

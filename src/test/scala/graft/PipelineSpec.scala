@@ -62,22 +62,6 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("ngram df-ascending prefix order is result-identical to the hash order") {
-    // graft.ngram.prefixOrder picks a PLAN (which ℓ tokens each doc
-    // indexes), never an answer: the AllPairs prefix theorem holds for
-    // any global total order, so the verified pair set must be
-    // bit-identical under both orders.
-    val hashOrder = Dedup.dDedupNgram(spark, sf).cache()
-    spark.conf.set("graft.ngram.prefixOrder", "df")
-    try {
-      val dfOrder = Dedup.dDedupNgram(spark, sf)
-      assert(hashOrder.exceptAll(dfOrder).count() == 0 &&
-        dfOrder.exceptAll(hashOrder).count() == 0,
-        "prefix order changed the verified pair set")
-      assert(hashOrder.count() > 0)
-    } finally spark.conf.unset("graft.ngram.prefixOrder")
-  }
-
   test("dedup_minhash: candidates are a subset of true near-dup pairs") {
     val mh = Dedup.dDedupMinhash(spark, sf).select("id1", "id2")
     val ng = Dedup.dDedupNgram(spark, sf).select("id1", "id2")
@@ -1069,42 +1053,6 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("q_profile ndv=approx: HLL estimate in error band, dedup exchange gone") {
-    import graft.operators.Profiling
-    val exact = Profiling.qProfile(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("ndv")).toMap
-    spark.conf.set("graft.profile.ndv", "approx")
-    try {
-      val df = Profiling.qProfile(spark, sf)
-      // the 100 TB shape: one aggregation pass, no partial-distinct
-      // Expand/dedup exchange on (col_name, value)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Expand") && plan.contains("approx_count_distinct"),
-        s"approx mode must plan the HLL sketch, not a distinct dedup:\n${plan.take(1500)}")
-      df.collect().foreach { r =>
-        val (c, got) = (r.getString(0), r.getAs[Long]("ndv"))
-        val truth = exact(c)
-        assert(math.abs(got - truth) <= math.max(2L, (truth * 0.15).toLong),
-          s"$c: approx ndv $got too far from exact $truth")
-      }
-      // everything except ndv stays exact in approx mode
-      val other = Profiling.qProfile(spark, sf).collect()
-        .map(r => (r.getString(0), r.getAs[Long]("n_rows"),
-          r.getAs[Long]("n_null"), r.getAs[Double]("min_val"),
-          r.getAs[Double]("max_val"))).toSet
-      spark.conf.unset("graft.profile.ndv")
-      val exactOther = Profiling.qProfile(spark, sf).collect()
-        .map(r => (r.getString(0), r.getAs[Long]("n_rows"),
-          r.getAs[Long]("n_null"), r.getAs[Double]("min_val"),
-          r.getAs[Double]("max_val"))).toSet
-      assert(other == exactOther)
-      intercept[IllegalArgumentException] {
-        spark.conf.set("graft.profile.ndv", "hll")
-        Profiling.qProfile(spark, sf)
-      }
-    } finally spark.conf.unset("graft.profile.ndv")
-  }
-
   test("blocklist verdicts: rule precedence, coverage, both classes present") {
     import graft.operators.WebCuration
     val df = WebCuration.dBlocklist(spark, sf).cache()
@@ -1328,27 +1276,6 @@ class PipelineSpec extends SparkSpec {
     assert(df.filter(col("is_anomaly") =!= (col("dev2") > col("bound"))).count() == 0)
   }
 
-  test("d_cluster star mode is bit-identical to min-label propagation") {
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val base = rows(Dedup.dCluster(spark, sf))
-    val baseIncr = rows(Dedup.dClusterIncr(spark, sf))
-    spark.conf.set("graft.cluster.ccMode", "star")
-    try {
-      val star = rows(Dedup.dCluster(spark, sf))
-      assert(star == base,
-        s"modes diverge: extra=${star -- base} missing=${base -- star}")
-      // the conf routes the whole clustering family, incremental included
-      assert(rows(Dedup.dClusterIncr(spark, sf)) == baseIncr,
-        "incremental clustering must follow the same mode and agree")
-    } finally spark.conf.unset("graft.cluster.ccMode")
-    intercept[IllegalArgumentException] {
-      spark.conf.set("graft.cluster.ccMode", "minlable")
-      try Dedup.dCluster(spark, sf)
-      finally spark.conf.unset("graft.cluster.ccMode")
-    }
-  }
-
   test("t_jsd matches a driver-side reference JSD exactly; bounded by 1 bit") {
     // Reference: plain-Scala word counts per source, same guarded
     // term expression, same ascending-term fold, same ⌊x·1e6+½⌋
@@ -1442,28 +1369,6 @@ class PipelineSpec extends SparkSpec {
     assert(got.values.exists(_._3 > 0.0), "some source must drift")
   }
 
-  test("t_jsd free fold mode: same ranking as parity, plan carries no collect_list") {
-    val parity = TextAnalysis.tJsd(spark, sf).collect()
-      .map(r => r.getString(0) -> r.getDouble(3)).toMap
-    spark.conf.set("graft.text.jsdFold", "free")
-    try {
-      val freeDf = TextAnalysis.tJsd(spark, sf)
-      val plan = freeDf.queryExecution.executedPlan.toString
-      assert(!plan.contains("collect_list"),
-        "free mode must not collect per-source term lists")
-      val free = freeDf.collect().map(r => r.getString(0) -> r.getDouble(3)).toMap
-      assert(free.keySet == parity.keySet)
-      free.foreach { case (s, v) =>
-        assert(math.abs(v - parity(s)) < 1e-9, s"$s: free $v vs parity ${parity(s)}")
-      }
-    } finally spark.conf.unset("graft.text.jsdFold")
-    intercept[IllegalArgumentException] {
-      spark.conf.set("graft.text.jsdFold", "fre")
-      try TextAnalysis.tJsd(spark, sf)
-      finally spark.conf.unset("graft.text.jsdFold")
-    }
-  }
-
   test("d_lsh_tune: recall falls as rows/band sharpen; independent recompute agrees") {
     val rows = Dedup.dLshTune(spark, sf).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getBoolean(2), r.getLong(3), r.getDouble(4)))
@@ -1485,56 +1390,6 @@ class PipelineSpec extends SparkSpec {
     rows.foreach { case (b, r, _, n, got) =>
       assert(n == truth.length.toLong)
       val want = truth.map(s => 1.0 - math.pow(1.0 - math.pow(s, r), b)).sum / n
-      assert(math.abs(got - want) < 1e-6, s"($b,$r): $got vs $want")
-    }
-  }
-
-  test("d_lsh_tune free fold ≡ parity fold; free plans no truth-set row") {
-    // the jsdFold twin: `free` swaps the oracle-bit-exact single-row
-    // sorted fold for a map-side-combined sum (the 100 TB shape) —
-    // same counts, means equal to summation-order noise
-    val parity = Dedup.dLshTune(spark, sf).collect()
-      .map(r => (r.getInt(0), (r.getLong(3), r.getDouble(4)))).toMap
-    spark.conf.set("graft.dedup.lshTuneFold", "free")
-    val free =
-      try Dedup.dLshTune(spark, sf).collect()
-        .map(r => (r.getInt(0), (r.getLong(3), r.getDouble(4)))).toMap
-      finally spark.conf.unset("graft.dedup.lshTuneFold")
-    assert(free.keySet == parity.keySet)
-    parity.foreach { case (b, (n, recall)) =>
-      assert(free(b)._1 == n, s"bands=$b: n_truth ${free(b)._1} vs $n")
-      assert(math.abs(free(b)._2 - recall) <= 1e-9,
-        s"bands=$b: free ${free(b)._2} vs parity $recall")
-    }
-    intercept[IllegalArgumentException] {
-      spark.conf.set("graft.dedup.lshTuneFold", "fre")
-      try Dedup.dLshTune(spark, sf)
-      finally spark.conf.unset("graft.dedup.lshTuneFold")
-    }
-  }
-
-  test("d_lsh_tune doc-sample gate ≡ full truth restricted to gated docs") {
-    // the sampled run must equal the full pipeline restricted to
-    // pairs whose BOTH endpoints pass the md5 gate — the property
-    // that makes the per-pair expectation unbiased on retained pairs
-    val n = 2
-    def gated(id: Long): Boolean =
-      java.lang.Long.parseLong(md5Hex(s"lshs:$id").substring(0, 8), 16) % n == 0
-    val fullGated = Dedup.dDedupNgram(spark, sf)
-      .select("id1", "id2", "jaccard")
-      .as[(Long, Long, Double)].collect()
-      .filter(p => gated(p._1) && gated(p._2))
-    assert(fullGated.nonEmpty, "gate left no pairs — test fixture degenerate")
-    spark.conf.set("graft.dedup.lshTuneSample", n.toString)
-    val rows =
-      try Dedup.dLshTune(spark, sf).collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getLong(3), r.getDouble(4)))
-      finally spark.conf.unset("graft.dedup.lshTuneSample")
-    rows.foreach { case (b, r, nTruth, got) =>
-      assert(nTruth == fullGated.length.toLong,
-        s"($b,$r): sampled n_truth $nTruth vs gated full ${fullGated.length}")
-      val want = fullGated
-        .map(p => 1.0 - math.pow(1.0 - math.pow(p._3, r), b)).sum / nTruth
       assert(math.abs(got - want) < 1e-6, s"($b,$r): $got vs $want")
     }
   }
@@ -1664,29 +1519,6 @@ class PipelineSpec extends SparkSpec {
     // the fixture must exercise both directions: some reuse, some new
     assert(got.values.exists(_._2 > 0), "no delta doc reuses base grams")
     assert(got.values.exists(_._3 > 0), "every delta doc is fully stale")
-  }
-
-  test("t_novelty bloom tier: n_grams identical, no false negatives, measured fpp") {
-    val exact = TextAnalysis.tNovelty(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    spark.conf.set("graft.text.noveltyProbe", "bloom")
-    val bloom = try TextAnalysis.tNovelty(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    finally spark.conf.unset("graft.text.noveltyProbe")
-    assert(bloom.keySet == exact.keySet, "bloom tier changed the doc set")
-    var extra = 0L
-    var unseen = 0L
-    exact.foreach { case (id, (ng, ns)) =>
-      val (bg, bs) = bloom(id)
-      assert(bg == ng, s"doc $id n_grams drifted in bloom mode")
-      assert(bs >= ns, s"doc $id: bloom LOST a seen gram (false negative)")
-      assert(bs <= ng, s"doc $id: seen exceeds grams")
-      extra += bs - ns
-      unseen += ng - ns
-    }
-    assert(unseen > 0, "fixture degenerate: no unseen grams to test fpp on")
-    assert(extra.toDouble / unseen < 0.01,
-      s"bloom false-positive rate out of bound: $extra of $unseen unseen grams")
   }
 
   test("q_partition_hist matches a driver-side recompute of every bucket") {

@@ -848,24 +848,6 @@ class PlanQualitySpec extends SparkSpec {
       s"raw per-source quality list is back:\n$clLines")
   }
 
-  test("lsh tuner in free mode: no whole-truth-set row, plain partial-agg sum") {
-    // the parity fold's collect_list gathers EVERY τ-true pair into
-    // one row per config — fine at gate scale, the single-reducer
-    // shape at 100 TB; free mode must fold with a map-side-combined
-    // sum and no pair list anywhere in the plan
-    spark.conf.set("graft.dedup.lshTuneFold", "free")
-    try {
-      spark.catalog.clearCache()
-      val p = SparkEntry.queries("d_lsh_tune")(spark, sf)
-        .queryExecution.explainString(FormattedMode)
-      assert(!p.contains("collect_list"),
-        s"free-mode tuner still gathers the truth set into a row:\n${p.take(2500)}")
-      assert(!p.contains("sort_array"),
-        s"free-mode tuner still sorts a pair list:\n${p.take(2500)}")
-      assert(!p.contains("Window"), "tuner must not plan a window")
-    } finally spark.conf.unset("graft.dedup.lshTuneFold")
-  }
-
   test("label propagation: hash joins + partial-agg argmax, no neighborhood row") {
     val p = plan("g_labelprop")
     // votes must combine map-side (min over structs) — a collected

@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 
-/** Measured artifact for the d_dedup_ngram scale claim: on a Zipfian
-  * vocabulary the df-ascending canonical prefix order generates fewer
-  * prefix⋈prefix candidates than the zero-cost hash order (rare tokens
-  * concentrate in prefixes and collide less), while both orders stay
-  * result-identical. The driver's synthetic corpus has a near-uniform
-  * tiny vocabulary where the df pass doesn't pay — this fixture is the
-  * skewed corpus the 100 TB recommendation is about (SURVEY §8 records
-  * the numbers).
+/** The d_dedup_ngram prefix filter on a skewed corpus: on a Zipfian
+  * vocabulary (where a few hot shingles make the full inverted index's
+  * Σ df² explode) the hash-order prefixes generate fewer candidates
+  * than the full index while the verified pair set stays identical to
+  * a driver-side all-pairs Jaccard. The driver's synthetic corpus has
+  * a near-uniform tiny vocabulary; this fixture is the skewed one.
   */
 class ZipfNgramSpec extends SparkSpec {
 
@@ -34,14 +32,11 @@ class ZipfNgramSpec extends SparkSpec {
     assert(verified.subsetOf(truth) && verified.size <= ev.getLong(2))
   }
 
-  test("df-order prefixes cut candidate volume on a Zipfian corpus, result-identical") {
+  test("hash-order prefixes cut candidate volume on a Zipfian corpus, result-identical") {
     val rnd = new scala.util.Random(20260813L)
-    // Default sizes keep the suite fast; GRAFT_ZIPF_DOCS scales the
-    // fixture up for one-off wall-clock measurements (SURVEY §8
-    // records a 20k-doc run) without touching the checked-in bound.
-    val nBase = sys.env.get("GRAFT_ZIPF_DOCS").map(_.toInt).getOrElse(600)
+    val nBase = 600
     val nDups = nBase / 4
-    val vocab = math.max(3000, nBase * 5)
+    val vocab = 3000
     val zexp = 1.07
     val cum = Array.tabulate(vocab)(r => 1.0 / math.pow(r + 1.0, zexp))
       .scanLeft(0.0)(_ + _).tail
@@ -75,35 +70,31 @@ class ZipfNgramSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val sets = Dedup.ngramSets(spark, dir)
-    def run(order: String): (Long, Double, Set[(Long, Long)]) = {
-      spark.conf.set("graft.ngram.prefixOrder", order)
-      try {
-        val t0 = System.nanoTime()
-        val pairs = Dedup.dDedupNgram(spark, dir).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val secs = (System.nanoTime() - t0) / 1e9
-        val prefix = Dedup.ngramPrefix(spark, sets)
-        val cand = prefix.as("a").join(prefix.as("b"), "h")
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id"), col("b.doc_id"))
-          .dropDuplicates().count()
-        (cand, secs, pairs)
-      } finally spark.conf.unset("graft.ngram.prefixOrder")
-    }
-    // Untimed warmup of the full pipeline (JIT, parquet/page cache,
-    // codegen): without it the first-measured order pays cold-start
-    // and the wall comparison is biased toward whichever runs second.
-    run("hash")
-    val (hashCand, hashSecs, hashPairs) = run("hash")
-    val (dfCand, dfSecs, dfPairs) = run("df")
+    val pairs = Dedup.dDedupNgram(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def candidates(postings: org.apache.spark.sql.DataFrame): Long =
+      postings.as("a").join(postings.as("b"), "h")
+        .filter(col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id"), col("b.doc_id"))
+        .dropDuplicates().count()
+    val hashCand = candidates(Dedup.hashPrefix(sets))
+    val fullCand = candidates(sets.select(col("doc_id"), explode(col("hs")).as("h")))
+    // independent truth: all-pairs exact Jaccard over the collected
+    // sets (inter·10 ≥ union·3, the operator's integer threshold)
+    val bySet = sets.collect().map(r => r.getLong(0) -> r.getSeq[Any](1).toSet)
+    val truth = (for {
+      (i, a) <- bySet.iterator
+      (j, b) <- bySet.iterator if i < j
+      inter = (a & b).size if inter > 0 && inter * 10 >= (a.size + b.size - inter) * 3
+    } yield (i, j)).toSet
 
-    assert(hashPairs == dfPairs,
-      "prefix order changed the verified pair set — it must only pick a plan")
-    assert(hashPairs.nonEmpty, "fixture produced no near-dup pairs — nothing was exercised")
-    assert(dfCand < hashCand,
-      s"df-order candidates ($dfCand) not below hash-order ($hashCand) on a Zipfian corpus")
-    info(f"zipf(vocab=$vocab, s=$zexp) ${nBase + nDups} docs: candidates hash=$hashCand df=$dfCand " +
-      f"(${dfCand.toDouble / hashCand}%.3f×), wall hash=$hashSecs%.2fs df=$dfSecs%.2fs, " +
-      f"verified pairs=${hashPairs.size}")
+    assert(pairs == truth,
+      s"prefix-filtered pairs diverge from all-pairs Jaccard: extra=${pairs -- truth} " +
+        s"missing=${truth -- pairs}")
+    assert(pairs.nonEmpty, "fixture produced no near-dup pairs — nothing was exercised")
+    assert(hashCand < fullCand,
+      s"hash-order prefix candidates ($hashCand) not below the full index ($fullCand)")
+    info(f"zipf(vocab=$vocab, s=$zexp) ${nBase + nDups} docs: candidates hash=$hashCand " +
+      f"full=$fullCand (${hashCand.toDouble / fullCand}%.3f×), verified pairs=${pairs.size}")
   }
 }
