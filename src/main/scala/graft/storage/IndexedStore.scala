@@ -102,7 +102,7 @@ final case class ZOrderNIndex(columns: Seq[String], bits: Int = 2)
 }
 
 object IndexedStore {
-  private val BucketCol = "__bucket"
+  private[storage] val BucketCol = "__bucket"
   private val StatsFile = "_graft_stats.properties"
   private[graft] val TombstoneDir = "_graft_tombstones"
   private val ManifestFile = "_graft_manifest.properties"
@@ -1014,31 +1014,15 @@ object IndexedStore {
 
   /** Columns worth zone bounds: every indexed/declared column
     * (`kind.*` sidecar keys — statsOnly, secondary, range primary)
-    * EXCEPT primaries whose layout makes per-file bounds useless —
-    * a hash primary scatters its values uniformly across buckets
-    * (every file's zone spans the whole domain: pure stats cost,
-    * zero pruning — measured 6× on the commit and 4× on append
-    * throughput when tracked anyway), and curve primaries are
-    * already pruned cell-wise by the grid walk. The range primary
-    * keeps its zones: appends make buckets multi-file, and per-file
-    * bounds prune inside them. A store with no trackable column
-    * (e.g. a plain hash store with no statsOnly declarations) writes
-    * inventory-only checkpoints and pays NOTHING for the tier. */
-  private def zoneColumns(props: Properties): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    val declared = props.stringPropertyNames.asScala.toSeq
-      .filter(_.startsWith("kind.")).map(_.stripPrefix("kind."))
-    val excluded = Option(props.getProperty("layout")).toSeq.flatMap { l =>
-      val parts = l.split(":")
-      parts(0) match {
-        case "hash" => Seq(parts(1))
-        case "zorder" | "hilbert" => Seq(parts(1), parts(2))
-        case "zordern" => parts(1).split(",").toSeq
-        case _ => Seq.empty // range primary keeps its zones
-      }
-    }
-    (declared.toSet -- excluded).toSeq.sorted
-  }
+    * EXCEPT the layout columns whose per-file bounds prune nothing
+    * ([[Layout.unzoned]]: a hash primary's zones span the whole
+    * domain — measured 6× on the commit and 4× on append throughput
+    * when tracked anyway — and curve primaries are pruned cell-wise).
+    * A store with no trackable column (e.g. a plain hash store with
+    * no statsOnly declarations) writes inventory-only checkpoints and
+    * pays NOTHING for the tier. */
+  private def zoneColumns(props: Properties): Seq[String] =
+    keyed(props, "kind.").map(_._1).filterNot(Layout.of(props).unzoned.contains)
 
   /** Types with a total order both engines agree on driver-side.
     * Strings are included but guarded at compare time ([[zoneCmp]]):
@@ -1278,7 +1262,11 @@ object IndexedStore {
   }
 
   /** Write `df` (which must carry a `__rowid` column, e.g. from
-    * [[graft.core.Store]]) under `path` laid out by `primary`.
+    * [[graft.core.Store]]) under `path` laid out by `primary`. The
+    * spec becomes the generation's [[Layout]] here, once — for range
+    * and curve layouts that is the quantile pass fixing the cuts —
+    * and every later append and compaction of the generation buckets
+    * by that same value.
     *
     * `secondary` indexes become posting files ((key, rowid) parquet,
     * hash-bucketed by key under `path/_graft_idx_<col>`): a probe on a
@@ -1290,39 +1278,72 @@ object IndexedStore {
     * Bloom-filter sidecar: an equality probe on them consults the
     * (tiny) sidecar first and scans only the layout buckets whose
     * filter passes — membership pruning for columns that have no
-    * layout or postings of their own. */
+    * layout or postings of their own. All of these declarations are
+    * recorded in the generation's sidecar and survive [[compact]]. */
   def write(df: DataFrame, path: String, primary: IndexSpec,
       statsOnly: Seq[IndexSpec] = Nil, secondary: Seq[HashIndex] = Nil,
       bloom: Seq[String] = Nil): Unit = {
+    require(df.columns.contains(RowId), s"IndexedStore requires a $RowId column")
+    val statsKinds = statsOnly.map {
+      case HashIndex(c, _, inc) =>
+        // statsOnly advertises selectivity with no postings behind it;
+        // an include list there would promise a covering read that
+        // cannot be served.
+        require(inc.isEmpty, s"statsOnly index on $c cannot carry include columns")
+        c -> "hash"
+      case RangeIndex(c, _) => c -> "range"
+      // curve layouts are primary-only: as statsOnly they would
+      // advertise a kind with no pruning path behind it, so reject
+      // loudly instead of mis-steering index selection.
+      case curve => throw new IllegalArgumentException(
+        s"curve layouts are primary-only, not statsOnly: $curve")
+    }
+    val layout = layoutOf(df, primary)
     val token = beginCommit(path)
     try {
       val gen = nextGenName(path)
-      writeLayout(df, new HPath(path, gen).toString, primary, statsOnly, secondary, bloom)
+      writeLayout(df, new HPath(path, gen).toString, layout, statsKinds, secondary, bloom)
       commitAndSweep(path, gen, token)
     } catch {
       case e: Throwable => abortCommit(path, token); throw e
     }
   }
 
-  /** Build one complete store generation at `path`, a generation
-    * dir. */
-  private def writeLayout(df: DataFrame, path: String, primary: IndexSpec,
-      statsOnly: Seq[IndexSpec], secondary: Seq[HashIndex],
+  /** The [[Layout]] `spec` lays `df` out by: range and curve cuts are
+    * `df`'s quantiles, one multi-column pass for all of a curve's
+    * columns. */
+  private def layoutOf(df: DataFrame, spec: IndexSpec): Layout = {
+    def cuts(cols: Seq[String], n: Int): Seq[Seq[Double]] =
+      df.stat.approxQuantile(cols.toArray, (1 until n).map(_.toDouble / n).toArray, 0.01)
+        .map(_.distinct.sorted.toSeq).toSeq
+    spec match {
+      case HashIndex(c, n, inc) =>
+        require(inc.isEmpty,
+          s"include columns are for secondary indexes; the primary layout's " +
+            s"data files already carry every column (index on $c)")
+        Layout.Hash(c, n)
+      case RangeIndex(c, n) => Layout.Range(c, cuts(Seq(c), n).head)
+      case ZOrderIndex(a, b, bits) => Layout.Curve("zorder", Seq(a, b), bits, cuts(Seq(a, b), 1 << bits))
+      case HilbertIndex(a, b, bits) => Layout.Curve("hilbert", Seq(a, b), bits, cuts(Seq(a, b), 1 << bits))
+      case ZOrderNIndex(cols, bits) => Layout.Curve("zordern", cols, bits, cuts(cols, 1 << bits))
+    }
+  }
+
+  /** Build one complete store generation at `path`, a generation dir:
+    * `df` bucketed by `layout`, `statsKinds` (column → `hash` |
+    * `range`) recorded for index choice, then postings, blooms and the
+    * sidecar. */
+  private def writeLayout(df: DataFrame, path: String, layout: Layout,
+      statsKinds: Seq[(String, String)], secondary: Seq[HashIndex],
       bloom: Seq[String]): Unit = {
-    require(df.columns.contains(RowId), s"IndexedStore requires a $RowId column")
     val props = new Properties()
     // the generation's layout schema, recorded at write time so the
     // append-time widening guard needs no directory listing and no
-    // footer read — and survives store re-creation at the same path
-    // (props are rewritten per generation)
+    // footer read, and an empty generation opens without one — and
+    // survives store re-creation at the same path (props are
+    // rewritten per generation)
     props.setProperty("schema.cols", schemaSpecOf(df))
-    val primaryCols = primary match {
-      case ZOrderIndex(a, b, _) => Seq(a, b)
-      case HilbertIndex(a, b, _) => Seq(a, b)
-      case ZOrderNIndex(cols, _) => cols
-      case other => Seq(other.column)
-    }
-    val statCols = (primaryCols ++ (statsOnly ++ secondary).map(_.column)).distinct
+    val statCols = (layout.columns ++ statsKinds.map(_._1) ++ secondary.map(_.column)).distinct
     // maxrowid rides the same stats pass: it is the generation's
     // as-of-commit rowid high-water mark, which the commit-log entry
     // publishes so a CDC tail can read the commit-time snapshot even
@@ -1337,105 +1358,20 @@ object IndexedStore {
     statCols.zipWithIndex.foreach { case (c, i) =>
       props.setProperty(s"ndv.$c", stats.getLong(i + 2).toString)
     }
-    statsOnly.foreach {
-      case HashIndex(c, _, inc) =>
-        // statsOnly advertises selectivity with no postings behind it;
-        // an include list there would promise a covering read that
-        // cannot be served.
-        require(inc.isEmpty, s"statsOnly index on $c cannot carry include columns")
-        props.setProperty(s"kind.$c", "hash")
-      case RangeIndex(c, _) => props.setProperty(s"kind.$c", "range")
-      // 2-d curve layouts are primary-only: as statsOnly they would
-      // advertise a kind with no pruning path behind it, so reject
-      // loudly instead of mis-steering index selection.
-      case curve => throw new IllegalArgumentException(
-        s"curve layouts are primary-only, not statsOnly: $curve")
-    }
+    statsKinds.foreach { case (c, k) => props.setProperty(s"kind.$c", k) }
     secondary.foreach { case HashIndex(c, n, inc) =>
       props.setProperty(s"kind.$c", "hash")
       props.setProperty(s"sec.$c", n.toString)
       if (inc.nonEmpty) props.setProperty(s"inc.$c", inc.mkString(","))
     }
     bloom.foreach(c => props.setProperty(s"bloom.$c", "1"))
-    val bucketed = primary match {
-      case HashIndex(c, n, inc) =>
-        require(inc.isEmpty,
-          s"include columns are for secondary indexes; the primary layout's " +
-            s"data files already carry every column (index on $c)")
-        props.setProperty("layout", s"hash:$c:$n")
-        props.setProperty(s"kind.$c", "hash")
-        val b = df.withColumn(BucketCol, pmod(hash(col(c)), lit(n)))
-        b.repartition(col(BucketCol))
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-        b
-      case RangeIndex(c, n) =>
-        val bounds = df.stat.approxQuantile(c, (1 until n).map(_.toDouble / n).toArray, 0.01)
-          .distinct.sorted
-        props.setProperty("layout", s"range:$c:${bounds.mkString(",")}")
-        props.setProperty(s"kind.$c", "range")
-        val b = df.withColumn(BucketCol, rangeBucket(col(c), bounds))
-        b.repartition(col(BucketCol))
-          .sortWithinPartitions(col(c))
-          .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-        b
-      case ZOrderIndex(ca, cb, bits) =>
-        writeTwoDim(df, path, props, "zorder", ca, cb, bits)
-      case HilbertIndex(ca, cb, bits) =>
-        writeTwoDim(df, path, props, "hilbert", ca, cb, bits)
-      case ZOrderNIndex(cols, bits) =>
-        writeNDim(df, path, props, cols, bits)
-    }
+    props.setProperty("layout", layout.render)
+    layout.columns.foreach(c => props.setProperty(s"kind.$c", layout.kind))
+    val bucketed = df.withColumn(BucketCol, layout.bucket)
+    val parts = bucketed.repartition(col(BucketCol))
+    layout.sortColumn.fold(parts)(c => parts.sortWithinPartitions(col(c)))
+      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
     // Postings/blooms go AFTER the base write: overwrite clears `path`.
-    writeTail(df, bucketed, path, props, secondary, bloom)
-  }
-
-  /** Shared write path for the two-column curve layouts (z-order and
-    * Hilbert): same quantile grid, different cell numbering. The
-    * interleave delegates to the N-dim machinery — [[zBucketN]] at
-    * n=2 is bit-identical to the historical 2-d interleave (dim-0
-    * bits in the odd positions), so the layout strings and existing
-    * stores are unchanged. */
-  private def writeTwoDim(df: DataFrame, path: String, props: Properties,
-      kind: String, ca: String, cb: String, bits: Int): DataFrame = {
-    val n = 1 << bits
-    // one multi-column quantile pass — not one full scan per column
-    val cuts = df.stat.approxQuantile(Array(ca, cb),
-        (1 until n).map(_.toDouble / n).toArray, 0.01)
-      .map(_.distinct.sorted).toSeq
-    props.setProperty("layout",
-      s"$kind:$ca:$cb:$bits:${cuts(0).mkString(",")}|${cuts(1).mkString(",")}")
-    props.setProperty(s"kind.$ca", "range")
-    props.setProperty(s"kind.$cb", "range")
-    val zc = zBucketN(Seq(col(ca), col(cb)), cuts, bits)
-    val cell = if (kind == "hilbert") hilbertFromZ(zc, bits) else zc
-    val b = df.withColumn(BucketCol, cell)
-    b.repartition(col(BucketCol))
-      .sortWithinPartitions(col(ca))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-    b
-  }
-
-  /** Write path for the N-column z-order layout: per-column quantile
-    * cuts, cell = interleave of the N bucket ranks. */
-  private def writeNDim(df: DataFrame, path: String, props: Properties,
-      cols: Seq[String], bits: Int): DataFrame = {
-    val n = 1 << bits
-    // one multi-column quantile pass — not one full scan per column
-    val cuts = df.stat.approxQuantile(cols.toArray,
-        (1 until n).map(_.toDouble / n).toArray, 0.01)
-      .map(_.distinct.sorted).toSeq
-    props.setProperty("layout",
-      s"zordern:${cols.mkString(",")}:$bits:${cuts.map(_.mkString(",")).mkString("|")}")
-    cols.foreach(c => props.setProperty(s"kind.$c", "range"))
-    val b = df.withColumn(BucketCol, zBucketN(cols.map(col), cuts, bits))
-    b.repartition(col(BucketCol))
-      .sortWithinPartitions(col(cols.head))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(path)
-    b
-  }
-
-  private def writeTail(df: DataFrame, bucketed: DataFrame, path: String,
-      props: Properties, secondary: Seq[HashIndex], bloom: Seq[String]): Unit = {
     secondary.foreach { case HashIndex(c, n, inc) =>
       writePostings(df, path, c, n, inc, overwrite = true)
     }
@@ -1513,118 +1449,6 @@ object IndexedStore {
       .agg(expr("bit_or(shiftleft(cast(1 as bigint), bit % 64))").as("bits"))
       .write.mode(if (overwrite) "overwrite" else "append")
       .parquet(bloomDir(path, column))
-
-  /** Bucket id = number of boundaries ≤ value (monotone in the key,
-    * so a range of keys maps to a contiguous bucket range). */
-  private def rangeBucket(c: Column, bounds: Array[Double]): Column =
-    bounds.foldLeft(lit(0)) { (acc, b) => acc + when(c >= b, 1).otherwise(0) }
-
-  /** N-dimensional z-cell id: bit k of dimension d lands at position
-    * k·N + (N-1-d), so dimension 0 takes the most-significant slot of
-    * each interleave group (at n=2 this IS the historical 2-d a/b
-    * interleave — a-bits odd, b-bits even — so the 2-d layouts
-    * delegate here and existing stores read back unchanged). */
-  private def zBucketN(cols: Seq[Column], cuts: Seq[Array[Double]], bits: Int): Column = {
-    val n = cols.size
-    val ranks = cols.zip(cuts).map { case (c, cu) => rangeBucket(c, cu) }
-    (0 until bits).flatMap { k =>
-      ranks.zipWithIndex.map { case (r, d) =>
-        shiftleft(shiftright(r, k).bitwiseAND(lit(1)), k * n + (n - 1 - d))
-      }
-    }.reduce(_ bitwiseOR _)
-  }
-
-  /** Dimension-d coordinate of N-dim z-cell `z` (inverse of
-    * [[zBucketN]], driver-side). */
-  private def zCoordN(z: Int, n: Int, bits: Int, d: Int): Int =
-    (0 until bits).map(k => ((z >> (k * n + (n - 1 - d))) & 1) << k).sum
-
-  private val CurveKinds = Set("zorder", "hilbert", "zordern")
-
-  /** Parse a curve layout string into its dimension columns, bits,
-    * per-dimension cuts accessor, and the z→cell renumbering
-    * (identity except Hilbert). The two legacy 2-d formats
-    * (`zorder:a:b:bits:cutsA|cutsB`, same for hilbert) and the N-dim
-    * format (`zordern:c1,..,cn:bits:cuts1|..|cutsn`) both land here —
-    * the parse boundary is the ONLY place the formats differ. */
-  private def parseCurve(layoutStr: String)
-      : (Seq[String], Int, Int => Array[Double], Int => Int) = {
-    def cutsFn(cutParts: Array[String]): Int => Array[Double] =
-      i => cutParts(i).split(",").filter(_.nonEmpty).map(_.toDouble)
-    if (layoutStr.startsWith("zordern:")) {
-      val zs = layoutStr.split(":", 4)
-      (zs(1).split(",").toSeq, zs(2).toInt, cutsFn(zs(3).split("\\|", -1)), identity)
-    } else {
-      val zs = layoutStr.split(":", 5)
-      val bits = zs(3).toInt
-      val renumber: Int => Int =
-        if (zs(0) == "hilbert") hilbertOfZ(_, bits) else identity
-      (Seq(zs(1), zs(2)), bits, cutsFn(zs(4).split("\\|", -1)), renumber)
-    }
-  }
-
-  /** Probe-side bucket range for one comparison over one dimension's
-    * quantile cuts; `nMax` is the top bucket id. None when the probe
-    * value doesn't parse as a number (a mistyped probe must DEGRADE
-    * to an unpruned scan, never throw out of find()). A lower-side
-    * bound landing exactly on a cut widens one bucket down: the probe
-    * literal rounds through double here, so its exact value could sit
-    * on either side of the boundary — the extra bucket keeps the
-    * pruned set a superset and the post-filter keeps results exact. */
-  private def bucketRange(cuts: Array[Double],
-      cmp: graft.core.Comparison, nMax: Int): Option[(Int, Int)] = {
-    def bk(v: Any): Option[Int] =
-      scala.util.Try(v.toString.toDouble).toOption.map(d => cuts.count(_ <= d))
-    def loBk(v: Any): Option[Int] = bk(v).map { b =>
-      val d = v.toString.toDouble
-      if (cuts.contains(d)) math.max(b - 1, 0) else b
-    }
-    cmp match {
-      case graft.core.Comparison.Equal(graft.core.Value.Const(v)) =>
-        for (lo <- loBk(v); hi <- bk(v)) yield (lo, hi)
-      case graft.core.Comparison.Between(graft.core.Value.Const(lo), _,
-          graft.core.Value.Const(hi), _) =>
-        for (l <- loBk(lo); h <- bk(hi)) yield (l, h)
-      case graft.core.Comparison.Less(graft.core.Value.Const(v), _) =>
-        bk(v).map((0, _))
-      case graft.core.Comparison.Greater(graft.core.Value.Const(v), _) =>
-        loBk(v).map((_, nMax))
-      case _ => None
-    }
-  }
-
-  /** Hilbert index of grid cell (x, y) on a 2^bits × 2^bits grid —
-    * the standard rotate-and-accumulate walk (driver-side; the write
-    * path ships it as a folded lookup table, [[hilbertFromZ]]). */
-  private def xy2d(bits: Int, x0: Int, y0: Int): Int = {
-    var x = x0; var y = y0; var d = 0
-    var s = 1 << (bits - 1)
-    while (s > 0) {
-      val rx = if ((x & s) > 0) 1 else 0
-      val ry = if ((y & s) > 0) 1 else 0
-      d += s * s * ((3 * rx) ^ ry)
-      if (ry == 0) { // rotate the quadrant so the walk stays contiguous
-        if (rx == 1) { x = s - 1 - x; y = s - 1 - y }
-        val t = x; x = y; y = t
-      }
-      s >>= 1
-    }
-    d
-  }
-
-  /** Hilbert cell id from the z-cell id: both curves visit the same
-    * grid, so the renumbering is a 4^bits-entry lookup — built once on
-    * the driver, shipped as an array literal that ConstantFolding
-    * collapses, and indexed per row in O(1). Far cheaper than
-    * unrolling the data-dependent rotation walk as a when-chain. */
-  private def hilbertFromZ(zc: Column, bits: Int): Column = {
-    val lut = (0 until (1 << (2 * bits))).map(hilbertOfZ(_, bits))
-    element_at(array(lut.map(lit): _*), zc + 1)
-  }
-
-  /** Hilbert cell id of 2-d z-cell `z` (driver-side). */
-  private def hilbertOfZ(z: Int, bits: Int): Int =
-    xy2d(bits, zCoordN(z, 2, bits, 0), zCoordN(z, 2, bits, 1))
 
   private def postingDir(path: String, column: String): String =
     new HPath(path, s"_graft_idx_$column").toString
@@ -1754,22 +1578,24 @@ object IndexedStore {
       view: CkptView) {
     CkptLocalScan.register(spark)
     private val props = loadProps(path)
+    private val layout = Layout.of(props)
 
     /** Schema comes from ONE leaf footer (appends share the layout
       * schema by construction — append() writes through the same frame
       * shape); an empty generation (no checkpointed files, no appends)
-      * serves an EMPTY frame, not a directory read — any parquet
-      * physically there is by definition unlogged (a crashed append),
-      * and the visible-iff-logged contract must hold in exactly that
-      * window. Its schema comes from whatever the directory holds when
-      * inferable (a truly file-less directory fails the read). */
+      * serves an EMPTY frame of the schema its sidecar records
+      * (`schema.cols`), never a directory read — any parquet physically
+      * there is by definition unlogged (a crashed append), and the
+      * visible-iff-logged contract must hold in exactly that window. */
     private val base: DataFrame = {
       // signature-keyed memo: repeat opens of one generation reuse
       // the index (its collect-tier job, schema footer, sizeInBytes)
       val fi = CkptFileIndex.cached(spark, path, view.ckptParquet, view.extras,
         bucketed = true)
       fi.dataSchemaOpt match {
-        case None => spark.read.parquet(path).filter(lit(false))
+        case None =>
+          spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            StructType(recordedSchema(props).fields ++ fi.partitionSchema.fields))
         case Some(dataSchema) =>
           val relation = org.apache.spark.sql.execution.datasources
             .HadoopFsRelation(fi, fi.partitionSchema, dataSchema, None,
@@ -1823,9 +1649,9 @@ object IndexedStore {
     // pre-snapshot behavior.
     private val postings = {
       val m = scala.collection.mutable.Map.empty[String, DataFrame]
-      secondaryColumns(props).foreach { case (c, _, _) =>
-        scala.util.Try(spark.read.parquet(postingDir(path, c)))
-          .foreach(df => m(c) = df)
+      secondaryIndexes(props).foreach { idx =>
+        scala.util.Try(spark.read.parquet(postingDir(path, idx.column)))
+          .foreach(df => m(idx.column) = df)
       }
       m
     }
@@ -1844,93 +1670,29 @@ object IndexedStore {
       * listing is small the probe runs on the driver
       * ([[CkptLocalScan]]), otherwise as a Spark scan. */
     def find(conds: Seq[graft.core.Condition]): DataFrame = {
-    val layout = props.getProperty("layout").split(":", 3)
     val chosen = chooseIndexIn(props, conds)
     val (from, bucketPred) = chosen match {
-      case Some(c) if c != layout(1) && props.getProperty(s"sec.$c") != null =>
+      case Some(c) if !layout.columns.contains(c) && props.getProperty(s"sec.$c") != null =>
         // Secondary posting probe: one posting bucket → rowid set →
         // semi-join against the base (posting lists for one key are
         // estimate-sized, i.e. small by construction).
-        val n = props.getProperty(s"sec.$c").toInt
-        val probeVals = conds.collect {
-          case graft.core.Condition(`c`, graft.core.Comparison.Equal(graft.core.Value.Const(v))) => v
-        }
-        probeVals.headOption match {
-          case Some(v) =>
-            // Cast the probe literal to the stored column's type before
-            // hashing: Murmur3 is type-sensitive, so e.g. an Int literal
-            // probing a Long column would prune to the wrong bucket.
-            val typed = lit(v).cast(base.schema(c).dataType)
-            val rowids = posting(c)
-              .filter(col(BucketCol) === pmod(hash(typed), lit(n)))
-              .filter(col("__key") === typed)
-              .select(RowId).distinct()
-            // No broadcast hint: rows/ndv is only the MEAN posting-list
-            // size, so it cannot rule out one skewed hot key with a
-            // huge list. The distinct above already shuffles, and AQE
-            // reads the ACTUAL rowid-set size at runtime — converting
-            // to a broadcast semi-join when the key is genuinely small
-            // and keeping the shuffled join when it is hot.
-            (base.join(rowids, Seq(RowId), "left_semi"), None)
-          case None => (base, None)
-        }
-      // Curve layouts (2-d z-order / Hilbert, N-dim z-order) share
-      // ONE grid walk: every condition over an indexed column bounds
-      // its dimension, the driver keeps the cells inside the
-      // hyper-rectangle, and only the cell NUMBERING differs (the
-      // Hilbert renumber; identity for z-order). Only overlapping
-      // cells are read.
-      case Some(c) if CurveKinds.contains(layout(0)) =>
-        val (colsN, bits, cutsOf, renumber) =
-          parseCurve(props.getProperty("layout"))
-        val nDims = colsN.size
-        val ranges: Seq[(Int, (Int, Int))] = conds.flatMap { cond =>
-          val d = colsN.indexOf(cond.column)
-          if (d < 0) None
-          else bucketRange(cutsOf(d), cond.cmp, (1 << bits) - 1).map((d, _))
-        }
-        val cells = (0 until (1 << (nDims * bits))).flatMap { z =>
-          val keep = ranges.forall { case (d, (lo, hi)) =>
-            val v = zCoordN(z, nDims, bits, d); v >= lo && v <= hi
-          }
-          if (keep) Some(renumber(z)) else None
-        }
-        (base, Some(col(BucketCol).isin(cells: _*)))
-      case Some(c) if c == layout(1) =>
-        layout(0) match {
-          case "hash" =>
-            val n = layout(2).toInt
-            val probes = conds.collect {
-              case graft.core.Condition(`c`, graft.core.Comparison.Equal(graft.core.Value.Const(v))) =>
-                // Same type-sensitive-hash discipline as the posting probe.
-                col(BucketCol) === pmod(hash(lit(v).cast(base.schema(c).dataType)), lit(n))
-            }
-            // equality probe → single bucket (constant-folded → pruned)
-            (base, probes.reduceOption(_ && _))
-          case "range" =>
-            val bounds = if (layout(2).isEmpty) Array.empty[Double]
-              else layout(2).split(",").map(_.toDouble)
-            val probes: Seq[Column] = conds.collect {
-              case graft.core.Condition(`c`, cmp) => cmp match {
-                case graft.core.Comparison.Equal(graft.core.Value.Const(v)) =>
-                  col(BucketCol) === rangeBucket(lit(v), bounds)
-                case graft.core.Comparison.Between(graft.core.Value.Const(lo), _, graft.core.Value.Const(hi), _) =>
-                  col(BucketCol).between(rangeBucket(lit(lo), bounds), rangeBucket(lit(hi), bounds))
-                case graft.core.Comparison.Less(graft.core.Value.Const(v), _) =>
-                  col(BucketCol) <= rangeBucket(lit(v), bounds)
-                case graft.core.Comparison.Greater(graft.core.Value.Const(v), _) =>
-                  col(BucketCol) >= rangeBucket(lit(v), bounds)
-                case _ => lit(true)
-              }
-            }
-            (base, probes.reduceOption(_ && _))
-        }
-      // No index serves — an equality condition on a bloom column can
-      // still prune to the buckets whose filter passes (a superset:
-      // bloom false positives only widen the scan, the re-filter below
-      // keeps results exact; no false negatives by construction).
+        val (bucket, typed) = postingBucket(c, conds)
+        val rowids = bucket.filter(col("__key") === typed).select(RowId).distinct()
+        // No broadcast hint: rows/ndv is only the MEAN posting-list
+        // size, so it cannot rule out one skewed hot key with a
+        // huge list. The distinct above already shuffles, and AQE
+        // reads the ACTUAL rowid-set size at runtime — converting
+        // to a broadcast semi-join when the key is genuinely small
+        // and keeping the shuffled join when it is hot.
+        (base.join(rowids, Seq(RowId), "left_semi"), None)
+      // The layout's own bucket predicate (hash bucket, range buckets
+      // or the curve grid walk) when it serves the chosen index. When
+      // none does, an equality condition on a bloom column can still
+      // prune to the buckets whose filter passes (a superset: bloom
+      // false positives only widen the scan, the re-filter below keeps
+      // results exact; no false negatives by construction).
       case _ =>
-        val bloomPred = conds.collectFirst {
+        def bloomPred = conds.collectFirst {
           case graft.core.Condition(c, graft.core.Comparison.Equal(graft.core.Value.Const(v)))
               if props.getProperty(s"bloom.$c") != null => (c, v)
         }.flatMap { case (c, v) =>
@@ -1939,11 +1701,28 @@ object IndexedStore {
             case buckets => col(BucketCol).isin(buckets: _*)
           }
         }
-        (base, bloomPred)
+        (base, chosen.flatMap(c => layout.probe(c, conds, base.schema(_).dataType))
+          .orElse(bloomPred))
     }
     val pred = (bucketPred.toSeq ++ live.toSeq :+ graft.core.Condition.all(conds))
       .reduce(_ && _)
     from.filter(pred).drop(BucketCol)
+    }
+
+    /** Secondary index `c`'s posting bucket for the probe's equality
+      * value on `c`, and that value as a literal of the stored type.
+      * Both callers pick `c` for an Equal(Const) condition on it, so the
+      * value exists. The cast comes before hashing: Murmur3 is
+      * type-sensitive, so e.g. an Int literal probing a Long column
+      * would prune to the wrong bucket. */
+    private def postingBucket(c: String,
+        conds: Seq[graft.core.Condition]): (DataFrame, Column) = {
+      val v = conds.collectFirst {
+        case graft.core.Condition(`c`, graft.core.Comparison.Equal(graft.core.Value.Const(v))) => v
+      }.get
+      val typed = lit(v).cast(base.schema(c).dataType)
+      (posting(c).filter(col(BucketCol) === pmod(hash(typed), lit(props.getProperty(s"sec.$c").toInt))),
+        typed)
     }
 
     /** Buckets whose bloom filter passes for value `v` on column `c`.
@@ -2008,18 +1787,8 @@ object IndexedStore {
         .headOption
       covering match {
         case Some(c) =>
-          val n = props.getProperty(s"sec.$c").toInt
-          // c was collected from an Equal(Const) condition above, so
-          // the probe value exists.
-          val v = conds.collectFirst {
-            case graft.core.Condition(`c`,
-                graft.core.Comparison.Equal(graft.core.Value.Const(pv))) => pv
-          }.get
-          val typed = lit(v).cast(base.schema(c).dataType)
-          val rows = posting(c)
-            .filter(col(BucketCol) === pmod(hash(typed), lit(n)))
-            .withColumnRenamed("__key", c)
-            .filter(col(c) === typed)
+          val (bucket, typed) = postingBucket(c, conds)
+          val rows = bucket.withColumnRenamed("__key", c).filter(col(c) === typed)
           rows.filter((live.toSeq :+ graft.core.Condition.all(conds)).reduce(_ && _))
             .select(projection.map(col): _*)
         case None =>
@@ -2028,22 +1797,29 @@ object IndexedStore {
     }
   }
 
-  /** Append a batch in the existing layout (reference insert,
-    * lib.rs:178-187: new rows are fed to the maintained index). Row
-    * count stats are refreshed; NDV goes stale until compact — the
-    * reference's estimate is a heuristic, staleness only affects
-    * index *choice*, never results. */
   /** `name:type` entries for the schema-identity contract between a
     * generation's layout write and its appends. */
   private def schemaSpecOf(df: DataFrame): String =
     df.schema.fields.map(f => s"${f.name}:${f.dataType.catalogString}")
       .mkString("|")
 
+  /** The schema a generation's `schema.cols` records (the inverse of
+    * [[schemaSpecOf]]; every column nullable). */
+  private def recordedSchema(props: Properties): StructType =
+    StructType(props.getProperty("schema.cols").split("\\|").filter(_.nonEmpty).toSeq.map { e =>
+      val Array(name, tpe) = e.split(":", 2)
+      StructField(name, org.apache.spark.sql.types.DataType.fromDDL(tpe))
+    })
+
+  /** Append a batch in the existing layout (reference insert,
+    * lib.rs:178-187: new rows are fed to the maintained index). Row
+    * count stats are refreshed; NDV goes stale until compact — the
+    * reference's estimate is a heuristic, staleness only affects
+    * index *choice*, never results. */
   def append(df: DataFrame, rootPath: String): Unit = {
     val gen = currentGen(rootPath)
     val path = new HPath(rootPath, gen).toString
     val props = loadProps(path)
-    val layout = props.getProperty("layout").split(":", 3)
     // In-generation schema widening is UNSUPPORTED by construction:
     // the checkpoint-served relation samples ONE leaf footer for its
     // data schema ([[CkptFileIndex.dataSchemaOpt]]), so a widened
@@ -2092,26 +1868,15 @@ object IndexedStore {
     // log-gated readers (a production impl would capture them from
     // the committer's task manifests instead of a second LIST)
     val before = listDataFiles(path).toSet
-    val out = layout(0) match {
-      case "hash" =>
-        df.withColumn(BucketCol, pmod(hash(col(layout(1))), lit(layout(2).toInt)))
-      case "range" =>
-        val bounds = if (layout(2).isEmpty) Array.empty[Double]
-          else layout(2).split(",").map(_.toDouble)
-        df.withColumn(BucketCol, rangeBucket(col(layout(1)), bounds))
-          .sortWithinPartitions(col(layout(1)))
-      case kind @ ("zorder" | "hilbert" | "zordern") =>
-        val (colsN, bits, cutsOf, _) = parseCurve(props.getProperty("layout"))
-        val zc = zBucketN(colsN.map(col), colsN.indices.map(cutsOf), bits)
-        df.withColumn(BucketCol, if (kind == "hilbert") hilbertFromZ(zc, bits) else zc)
-          .sortWithinPartitions(col(colsN.head))
-    }
+    val layout = Layout.of(props)
+    val bucketed = df.withColumn(BucketCol, layout.bucket)
+    val out = layout.sortColumn.fold(bucketed)(c => bucketed.sortWithinPartitions(col(c)))
     out.write.mode("append").partitionBy(BucketCol).parquet(path)
     val added = (listDataFiles(path).toSet -- before).toSeq.sorted
     // Maintain every secondary posting index and bloom sidecar,
     // mirroring the reference's on-insert index updates
     // (lib.rs:178-187).
-    secondaryColumns(props).foreach { case (c, n, inc) =>
+    secondaryIndexes(props).foreach { case HashIndex(c, n, inc) =>
       writePostings(df, path, c, n, inc, overwrite = false)
     }
     bloomColumns(props).foreach(c => writeBloom(out, path, c, overwrite = false))
@@ -2188,14 +1953,17 @@ object IndexedStore {
 
   /** Add a secondary hash index to a store that already has rows,
     * backfilling postings from the current contents — the reference's
-    * post-hoc `Store::index` with backfill (lib.rs:195-205). Stale
-    * postings for tombstoned rows are harmless: the read path prunes
-    * through postings first and filters tombstoned rowids afterwards,
-    * and compact rebuilds postings from survivors. */
+    * post-hoc `Store::index` with backfill (lib.rs:195-205). The
+    * backfill and the column's NDV read the log-gated view
+    * ([[open]] + find(Nil)): exactly the live rows a probe can see, so
+    * crash debris under the generation dir that no checkpoint or log
+    * entry names never reaches the postings, and tombstoned rows get
+    * none. The declaration lands in the generation's sidecar, so
+    * appends maintain the index and [[compact]] rebuilds it. */
   def addIndex(spark: SparkSession, rootPath: String, idx: HashIndex): Unit = {
     val path = resolve(rootPath)
     val props = loadProps(path)
-    val base = spark.read.parquet(path)
+    val base = open(spark, rootPath).find(Nil)
     writePostings(base, path, idx.column, idx.buckets, idx.include, overwrite = true)
     props.setProperty(s"kind.${idx.column}", "hash")
     props.setProperty(s"sec.${idx.column}", idx.buckets.toString)
@@ -2213,39 +1981,40 @@ object IndexedStore {
     storeProps(props, path)
   }
 
-  private def secondaryColumns(props: Properties): Seq[(String, Int, Seq[String])] = {
+  /** Sidecar keys under `prefix` as (rest of key, value), key-sorted. */
+  private def keyed(props: Properties, prefix: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    props.stringPropertyNames().asScala.toSeq.sorted
-      .filter(_.startsWith("sec."))
-      .map { k =>
-        val c = k.stripPrefix("sec.")
-        (c, props.getProperty(k).toInt, includeColumns(props, c))
-      }
+    props.stringPropertyNames.asScala.toSeq.sorted.filter(_.startsWith(prefix))
+      .map(k => k.stripPrefix(prefix) -> props.getProperty(k))
   }
+
+  /** The generation's secondary indexes: `sec.*` with their `inc.*`. */
+  private def secondaryIndexes(props: Properties): Seq[HashIndex] =
+    keyed(props, "sec.").map { case (c, n) => HashIndex(c, n.toInt, includeColumns(props, c)) }
 
   private def includeColumns(props: Properties, column: String): Seq[String] =
     Option(props.getProperty(s"inc.$column"))
       .map(_.split(",").toSeq).getOrElse(Nil)
 
-  private def bloomColumns(props: Properties): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    props.stringPropertyNames().asScala.toSeq.sorted
-      .filter(_.startsWith("bloom."))
-      .map(_.stripPrefix("bloom."))
-  }
+  private def bloomColumns(props: Properties): Seq[String] = keyed(props, "bloom.").map(_._1)
 
   /** Fold tombstones into a rewrite (the compaction every
-    * tombstone-based store eventually needs); secondary postings are
-    * rebuilt from the surviving rows. The new generation is built
-    * entirely to the side of the live one and published with the
-    * manifest-pointer swap: a crash at ANY point leaves the old
-    * generation live (a half-built gen dir is swept by the next
-    * commit), and open handles keep reading the generation they
-    * resolved. */
+    * tombstone-based store eventually needs). The new generation keeps
+    * the current one's [[Layout]] exactly — the same cuts and the same
+    * bucket ids, so no quantile pass runs — and every declaration its
+    * sidecar records: statsOnly kinds, secondary indexes with their
+    * include lists (postings rebuilt from the surviving rows) and
+    * bloom columns. Index choice and every probe path are therefore
+    * the same before and after. Re-bucketing by size (splitting hot
+    * buckets, re-cutting skewed ranges) is not done here. The new
+    * generation is built entirely to the side of the live one and
+    * published with the manifest-pointer swap: a crash at ANY point
+    * leaves the old generation live (a half-built gen dir is swept by
+    * the next commit), and open handles keep reading the generation
+    * they resolved. An empty generation compacts to an empty one. */
   def compact(spark: SparkSession, rootPath: String): Unit = {
     val cur = currentGen(rootPath)
     val props = loadProps(new HPath(rootPath, cur).toString)
-    val layout = props.getProperty("layout").split(":", 3)
     // Heal the outgoing generation FIRST, then rebuild from the
     // log-gated view: catch-ups make crashed-but-unlogged mutations
     // part of the net state before the read, and crash DEBRIS the
@@ -2254,25 +2023,16 @@ object IndexedStore {
     // here would bake such duplicates in permanently.
     reconcileMutationLog(rootPath, cur, Some(Long.MaxValue))
     val live = open(spark, rootPath).find(Nil)
-    val spec: IndexSpec = layout(0) match {
-      case "hash" => HashIndex(layout(1), layout(2).toInt)
-      case "range" => RangeIndex(layout(1))
-      case "zorder" =>
-        val zs = props.getProperty("layout").split(":", 5)
-        ZOrderIndex(zs(1), zs(2), zs(3).toInt)
-      case "hilbert" =>
-        val zs = props.getProperty("layout").split(":", 5)
-        HilbertIndex(zs(1), zs(2), zs(3).toInt)
-      case "zordern" =>
-        val zs = props.getProperty("layout").split(":", 4)
-        ZOrderNIndex(zs(1).split(",").toSeq, zs(2).toInt)
+    val layout = Layout.of(props)
+    val secondary = secondaryIndexes(props)
+    val statsKinds = keyed(props, "kind.").filterNot { case (c, _) =>
+      layout.columns.contains(c) || secondary.exists(_.column == c)
     }
     val token = beginCommit(rootPath)
     try {
       val gen = nextGenName(rootPath)
-      writeLayout(live, new HPath(rootPath, gen).toString, spec, Nil,
-        secondary = secondaryColumns(props).map { case (c, n, inc) => HashIndex(c, n, inc) },
-        bloom = bloomColumns(props))
+      writeLayout(live, new HPath(rootPath, gen).toString, layout, statsKinds,
+        secondary, bloomColumns(props))
       commitAndSweep(rootPath, gen, token)
     } catch {
       case e: Throwable => abortCommit(rootPath, token); throw e

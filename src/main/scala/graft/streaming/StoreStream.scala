@@ -38,8 +38,8 @@ import graft.storage.{HashIndex, IndexedStore}
   *    streams as the initial snapshot — the standard CDC bootstrap.
   *  - `append` (the [[IndexedStore.append]] record): the appended
   *    batch is the entry's contiguous rowid run [lo, hi] (Store
-  *    numbers inserts past the current max), read straight from the
-  *    generation's files — `added` rows.
+  *    numbers inserts past the current max), read from the data files
+  *    the entry names — `added` rows.
   *  - `delete` (the [[IndexedStore.delete]] record): the entry names
   *    the delete's own tombstone files; their rowids join the
   *    generation's raw files (raw, because the store's reads are
@@ -48,7 +48,7 @@ import graft.storage.{HashIndex, IndexedStore}
   *
   * Scale shape: the tail reads O(mutations) tiny files; each commit's
   * diff is two anti-joins between two generations of the SAME
-  * bucketed layout, each append a rowid-range scan, each delete a
+  * bucketed layout, each append a scan of its own files, each delete a
   * tombstone-file join. The consumer must keep up within the store's
   * retention window (the sweep reclaims generations beyond it) —
   * the same contract every log-structured CDC source carries.
@@ -163,7 +163,10 @@ object StoreStream {
     def raw = spark.read.parquet(genDir)
     val changes = e.kind match {
       case "append" =>
-        raw.filter(col(IndexedStore.RowId).between(e.lo.get, e.hi.get))
+        // the entry's own files: a crashed earlier copy of the batch
+        // may sit unlogged in the same directory over the same rowids
+        spark.read.option("basePath", genDir).parquet(e.files.get.split(",")
+            .map(f => s"$genDir/$f").toSeq: _*)
           .select(Keep.head, Keep.tail: _*).withColumn("change", lit("added"))
       case "delete" =>
         val rids = spark.read.parquet(e.files.get.split(",")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 import graft.core.{Condition, Store, Tables}
-import graft.storage.{HashIndex, IndexedStore}
+import graft.storage.{HashIndex, IndexedStore, RangeIndex}
 import graft.streaming.StoreStream
 
 /** Read-through-log: a store reader's file set comes from the commit
@@ -123,6 +123,48 @@ class LogViewSpec extends SparkSpec {
     IndexedStore.compact(spark, path)
     assert(rids(IndexedStore.open(spark, path).find(Nil)) == rids(batch),
       "the reconcile failed to catch up the crashed append")
+  }
+
+  test("an empty generation opens from its recorded schema and compacts") {
+    val cust = Tables(spark, sf).customer
+    val empty = Store.fromData(cust.filter(col("c_custkey") < 0), Seq("c_custkey")).data
+    val want = empty.schema.map(f => (f.name, f.dataType))
+    Seq(HashIndex("c_mktsegment", 4), RangeIndex("c_acctbal", 4)).foreach { spec =>
+      val path = freshRoot("emptyopen")
+      IndexedStore.write(empty, path, spec)
+      val probe = IndexedStore.open(spark, path)
+        .find(Seq(Condition.between("c_acctbal", 0.0, 100.0)))
+      assert(probe.count() == 0)
+      assert(probe.schema.map(f => (f.name, f.dataType)) == want, spec)
+      IndexedStore.compact(spark, path)
+      val after = IndexedStore.open(spark, path).find(Nil)
+      assert(after.count() == 0)
+      assert(after.schema.map(f => (f.name, f.dataType)) == want, spec)
+    }
+  }
+
+  test("addIndex backfills from the log-gated view, not from unlogged debris") {
+    val path = freshRoot("addidx")
+    val store = Store.fromData(spark.range(0, 300)
+      .select(col("id").as("k"), (col("id") % 7).as("v")), Seq("k"))
+    IndexedStore.write(store.data, path, HashIndex("k", 4))
+    // debris: an unlogged copy of a committed bucket file, as a crashed
+    // writer's retry can leave — no checkpoint or log entry names it
+    val genDir = new java.io.File(path, IndexedStore.generations(path).last)
+    val bucket = genDir.listFiles().filter(_.getName.startsWith("__bucket=")).minBy(_.getName)
+    val part = bucket.listFiles().filter(f => f.getName.startsWith("part-")).minBy(_.getName)
+    java.nio.file.Files.copy(part.toPath, new java.io.File(bucket, "part-99999-debris.parquet").toPath)
+    IndexedStore.addIndex(spark, path, HashIndex("v", 4, include = Seq("k")))
+    val open = IndexedStore.open(spark, path)
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq.sorted
+    (0L until 7L).foreach { v =>
+      val conds = Seq(Condition.eq("v", v))
+      val model = sorted(store.find(conds: _*))
+      assert(sorted(open.find(conds)) == model, s"find, v = $v")
+      assert(sorted(open.findCovering(conds, Seq(IndexedStore.RowId, "k"))) == model,
+        s"findCovering served the debris copy's rows, v = $v")
+    }
   }
 
   test("the reader's file inventory is exactly checkpoint + logged appends") {

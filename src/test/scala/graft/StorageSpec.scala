@@ -514,6 +514,79 @@ class StorageSpec extends SparkSpec {
     assert(df.count() > 0)
   }
 
+  /** The current generation's sidecar keys that carry the layout and
+    * the index declarations. */
+  private def declarations(path: String): Map[String, String] = {
+    val p = new java.util.Properties()
+    val in = new java.io.FileInputStream(
+      new java.io.File(currentGen(path), "_graft_stats.properties"))
+    try p.load(in) finally in.close()
+    import scala.jdk.CollectionConverters._
+    p.stringPropertyNames.asScala.toSeq
+      .filter(k => k == "layout" || Seq("kind.", "sec.", "inc.", "bloom.").exists(k.startsWith))
+      .map(k => k -> p.getProperty(k)).toMap
+  }
+
+  /** A small store whose quantiles move when `q < 30` is deleted. */
+  private def compactFixture: Store = Store.fromData(spark.range(0, 800).select(
+    col("id").as("k"), (col("id") % 97).cast("double").as("q"),
+    (col("id") % 367).cast("int").as("d"), (col("id") % 23).as("s"),
+    concat(lit("x"), (col("id") % 11).cast("string")).as("x"),
+    concat(lit("b"), (col("id") % 31).cast("string")).as("b")), Seq("k"))
+
+  private def ridsOf(df: DataFrame): Seq[Long] =
+    df.select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq.sorted
+
+  test("compact keeps a range store's layout, its declarations and its index choice") {
+    val path = tmp()
+    val store = compactFixture
+    IndexedStore.write(store.data, path, RangeIndex("q", 4),
+      statsOnly = Seq(RangeIndex("d", 8)),
+      secondary = Seq(HashIndex("s", 4, include = Seq("x"))), bloom = Seq("b"))
+    val gone = Condition("q", graft.core.Comparison.Less(graft.core.Value.of(30.0), orEqual = false))
+    IndexedStore.delete(spark, path, Seq(gone))
+    val model = store.delete(gone)
+    val probes = Seq(
+      Seq(Condition.between("q", 40.0, 60.0)), Seq(Condition.eq("q", 47.0)),
+      Seq(Condition.between("d", 100, 200)), Seq(Condition.eq("s", 7L)),
+      Seq(Condition.eq("b", "b3")), Seq(Condition.eq("s", 7L), Condition.between("d", 0, 300)))
+    val before = declarations(path)
+    val chosen = probes.map(IndexedStore.chooseIndex(path, _))
+    assert(chosen.take(4) == Seq(Some("q"), Some("q"), Some("d"), Some("s")))
+    IndexedStore.compact(spark, path)
+    assert(declarations(path) == before,
+      "compact must keep the layout string and every kind/sec/inc/bloom key")
+    assert(before("layout").startsWith("range:q:") && before("kind.d") == "range" &&
+      before("inc.s") == "x" && before.contains("bloom.b"))
+    assert(probes.map(IndexedStore.chooseIndex(path, _)) == chosen)
+    val open = IndexedStore.open(spark, path)
+    probes.foreach { conds =>
+      assert(ridsOf(open.find(conds)) == ridsOf(model.find(conds: _*)), conds)
+    }
+    assert(ridsOf(open.findCovering(Seq(Condition.eq("s", 7L)), Seq(IndexedStore.RowId, "x"))) ==
+      ridsOf(model.find(Condition.eq("s", 7L))))
+  }
+
+  test("compact keeps a curve store's cuts and cell numbering") {
+    val path = tmp()
+    val store = compactFixture
+    IndexedStore.write(store.data, path, HilbertIndex("q", "d", 2))
+    val gone = Condition("q", graft.core.Comparison.Less(graft.core.Value.of(30.0), orEqual = false))
+    IndexedStore.delete(spark, path, Seq(gone))
+    val model = store.delete(gone)
+    val before = declarations(path)
+    IndexedStore.compact(spark, path)
+    assert(declarations(path) == before,
+      "compact must rewrite into the generation's own cuts, not re-quantile the survivors")
+    val open = IndexedStore.open(spark, path)
+    Seq(Seq(Condition.between("q", 40.0, 60.0)), Seq(Condition.eq("d", 120)),
+        Seq(Condition.between("q", 50.0, 90.0), Condition.between("d", 10, 200)))
+      .foreach { conds =>
+        assert(IndexedStore.chooseIndex(path, conds).isDefined)
+        assert(ridsOf(open.find(conds)) == ridsOf(model.find(conds: _*)), conds)
+      }
+  }
+
   test("delete tombstones rows; compact folds them in") {
     val path = tmp()
     val store = Store.fromData(Tables(spark, sf).customer, Seq("c_custkey"))

@@ -269,6 +269,31 @@ class StoreStreamSpec extends SparkSpec {
       "a tail over the healed log must converge to the store's final state")
   }
 
+  test("an append retried after a crash diffs each batch row exactly once") {
+    // the crash: the batch's files landed but its entry never
+    // published; the writer retries the same batch, which numbers the
+    // same rowids, so the unlogged copy overlaps the retry's [lo, hi]
+    val path = freshRoot("retry")
+    val (base, appended0) = StoreStream.mutationHalves(spark, sf)
+    val appended = appended0.cache()
+    try {
+      IndexedStore.write(base, path, HashIndex("c_mktsegment", 4))
+      IndexedStore.append(appended, path)
+      new java.io.File(s"$path/_graft_log").listFiles()
+        .filter(_.getName.contains("-append-")).foreach(f => assert(f.delete()))
+      IndexedStore.append(appended, path)
+      val want = appended.select(IndexedStore.RowId).collect().map(_.getLong(0)).toSeq.sorted
+      val served = IndexedStore.find(spark, path, Nil)
+      assert(served.count() == base.count() + want.size, "the reader serves each row once")
+      val entry = StoreStream.logEntries(spark, path).filter(_.kind == "append")
+      assert(entry.size == 1)
+      val diff = rows(StoreStream.diffFor(spark, path, entry.head))
+      assert(diff.forall(_._3 == "added"))
+      assert(diff.map(_._4).toSeq.sorted == want,
+        "the append diff must emit each row of the batch exactly once")
+    } finally appended.unpersist(): Unit
+  }
+
   test("st_mview equals a batch aggregate over the store's FINAL state") {
     // The maintained view comes solely from folding the change
     // stream; the independent check reads the store itself after the
